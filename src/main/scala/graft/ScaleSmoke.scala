@@ -88,13 +88,6 @@ object ScaleSmoke {
         concat(col("text"), lit(" r"), col("rep")).as("text"))
       .localCheckpoint(true)
     println(s"corpus: ${corpus.count()} docs (${replicas}x sf0.1)")
-    def timed(name: String)(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-28s $secs%8.2f s")
-      secs
-    }
     def gavroFiles(dir: String): Int =
       Option(new java.io.File(dir).listFiles())
         .map(_.count(_.getName.endsWith(".gavro"))).getOrElse(0)
@@ -615,11 +608,6 @@ object ScaleSmoke {
       .localCheckpoint(true)
     val n = embCorpus.count()
     println(s"embeddings: $n vectors (${replicas}x sf0.1)")
-    def timed(name: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      body
-      println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
     val idxDir = java.nio.file.Files.createTempDirectory("smoke-ivfpq-app").toString
     timed("ivfpq_build_index") {
       graft.ops.IvfPqIndex.buildAndWrite(embCorpus, idxDir) }
@@ -700,11 +688,6 @@ object ScaleSmoke {
         col("label"))
       .localCheckpoint(true)
     println(s"embeddings: ${embCorpus.count()} vectors (${replicas}x sf0.1)")
-    def timed(name: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      body
-      println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
     val idxDir = java.nio.file.Files.createTempDirectory("smoke-ivfpq-idx").toString
     timed("ivfpq_build_index") {
       graft.ops.IvfPqIndex.buildAndWrite(embCorpus, idxDir) }
@@ -808,11 +791,6 @@ object ScaleSmoke {
     def scan() = spark.read.format("gavro")
       .option("schema", "request_log").load(dir)
       .groupBy(col("endpoint")).agg(count(lit(1)).as("n"))
-    def timed(name: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      body
-      println(f"$name%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
     timed("gavro_scan_64_files") {
       scan().write.format("noop").mode("overwrite").save() }
     var merged: Seq[String] = Seq.empty
@@ -872,11 +850,6 @@ object ScaleSmoke {
     spark.sql("CREATE TABLE smoke_orders USING parquet LOCATION " +
       s"'${pdir.getAbsolutePath}'")
     println(s"orders table: ${spark.table("smoke_orders").count()} rows")
-    def timed(name: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      body
-      println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
     val cols = Seq("o_custkey", "o_totalprice")
     timed("analyze_no_histogram") {
       graft.ops.Profiling.analyzeTable(spark, "smoke_orders", cols,
@@ -1019,6 +992,15 @@ object ScaleSmoke {
     t("column_profile") { graft.ops.Profiling.columnProfile(orCorpus) }
   }
 
+  /** Wall seconds of `body`, printed under `name`. */
+  private def timed(name: String)(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    val secs = (System.nanoTime() - t0) / 1e9
+    println(f"$name%-28s $secs%8.2f s")
+    secs
+  }
+
   private def time(spark: SparkSession, name: String)(
       df: => org.apache.spark.sql.DataFrame): Unit = {
     spark.catalog.clearCache()
@@ -1048,7 +1030,6 @@ object ScaleSmoke {
     t("minhash_candidates") { Dedup.minhashCandidates(corpus) }
     t("simhash_pairs") { Dedup.simhashPairs(corpus) }
     t("dup_clusters") { Dedup.dupClusters(corpus) }
-    t("dup_clusters_star") { Dedup.dupClustersStar(corpus) }
     t("token_packing") { Pipeline.tokenPacking(corpus) }
     t("quality_filter") { Pipeline.qualityFilter(corpus) }
     t("doc_top_term") { TextStats.docTopTerm(corpus) }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -122,26 +123,32 @@ object Dedup {
         |                  cast(element_at(sig, 2 * b + 2) as string))))""".stripMargin)))
       .toDF("doc_id", "band_idx", "band_key")
 
-  /** Candidate pairs = distinct (a, b) sharing ≥1 band bucket; est jaccard =
-    * matching signature fraction. No all-pairs anywhere.
-    */
   /** Skew guard: LSH buckets larger than this are dropped before the
-    * self-join. A degenerate key (empty/boilerplate text) otherwise creates
-    * one mega-bucket whose pair fan-out is quadratic — the classic skew
-    * failure of LSH joins at scale. Applied identically in the oracle, so
-    * outputs still hash-match.
-    */
+    * self-join (see [[capBuckets]]). */
   val MaxBucketSize = 1000
+
+  /** The skew cap every bucketed self-join in the near-dup tier applies:
+    * drop the rows of any bucket (rows sharing `keys`) holding more than
+    * `cap` rows. A degenerate key (empty/boilerplate text, a collapsed
+    * embedding) otherwise creates one mega-bucket whose pair fan-out is
+    * quadratic — the classic skew failure of LSH joins at scale. Each
+    * oracle applies the same `count(*) OVER (PARTITION BY keys)` filter,
+    * so outputs still hash-match. */
+  private[ops] def capBuckets(rows: DataFrame, cap: Int, keys: String*): DataFrame =
+    rows
+      .withColumn("bucket_n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("bucket_n") <= cap)
+      .drop("bucket_n")
+
+  /** Number of the 12 MinHash positions on which the signature columns
+    * `a` and `b` agree — the estimated Jaccard is this over 12. */
+  private[ops] def sigAgreement(a: String, b: String): Column =
+    expr(s"size(filter(sequence(1, 12), i -> element_at($a, i) = element_at($b, i)))")
 
   /** Distinct candidate pairs (doc_a < doc_b) sharing ≥1 capped band
     * bucket, from an already-staged signature table. */
   private def bandPairs(sigs: DataFrame): DataFrame = {
-    val b = bands(sigs)
-      .withColumn("bucket_n", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band_idx"), col("band_key"))))
-      .filter(col("bucket_n") <= MaxBucketSize)
-      .drop("bucket_n")
+    val b = capBuckets(bands(sigs), MaxBucketSize, "band_idx", "band_key")
     b.as("x").join(b.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.band_key") === col("y.band_key") &&
@@ -160,7 +167,7 @@ object Dedup {
     minhashSignatures(fan(corpus)).select("doc_id", "sig").transform(Par.stage)
 
   /** Pairs-only candidate path for consumers that never read
-    * `est_jaccard` ([[dupClusters]], [[dupClustersStar]], [[dedupApply]],
+    * `est_jaccard` ([[dupClusters]], [[dedupApply]],
     * [[dedupApplyQuality]], [[ngramJaccard]]): same distinct (doc_a,
     * doc_b) set as [[minhashCandidates]], WITHOUT its two signature
     * joins, the 12-position agreement expression, and the global sort —
@@ -176,8 +183,7 @@ object Dedup {
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        round(expr("size(filter(sequence(1, 12), i -> element_at(sig_a, i) = element_at(sig_b, i)))") / lit(12.0), 4)
-          .as("est_jaccard"))
+        round(sigAgreement("sig_a", "sig_b") / lit(12.0), 4).as("est_jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -211,27 +217,13 @@ object Dedup {
       .withColumn("ho", expr(
         s"cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint) % $heldoutMod = 0"))
       .persist() // lazy on purpose: eager measured 1.09 -> 1.81 s here
-    val b = bands(sigs)
-      .withColumn("bucket_n", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band_idx"), col("band_key"))))
-      .filter(col("bucket_n") <= MaxBucketSize)
-      .drop("bucket_n")
-    val pairs = b.as("x").join(b.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    pairs
+    bandPairs(sigs)
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
         col("ho").as("ho_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
         col("ho").as("ho_b")), "doc_b")
       .filter(col("ho_a") =!= col("ho_b"))
-      .withColumn("matching", expr(
-        "size(filter(sequence(1, 12), i -> element_at(sig_a, i) = element_at(sig_b, i)))")
-        .cast("long"))
+      .withColumn("matching", sigAgreement("sig_a", "sig_b").cast("long"))
       .filter(col("matching") >= LeakMatchMin)
       .select(
         when(col("ho_a"), col("doc_a")).otherwise(col("doc_b")).as("heldout_id"),
@@ -272,12 +264,7 @@ object Dedup {
     * `LshIndex.probeIndexed` too. */
   private[ops] def bandProbe(sigs: DataFrame, allBands: DataFrame,
       newFrom: Long): DataFrame = {
-    val b = allBands
-      .withColumn("bucket_n", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band_idx"), col("band_key"))))
-      .filter(col("bucket_n") <= MaxBucketSize)
-      .drop("bucket_n")
+    val b = capBuckets(allBands, MaxBucketSize, "band_idx", "band_key")
     val newBands = b.filter(col("doc_id") >= newFrom)
     val pairs = b.as("x").join(newBands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
@@ -289,8 +276,7 @@ object Dedup {
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        round(expr("size(filter(sequence(1, 12), i -> element_at(sig_a, i) = element_at(sig_b, i)))") / lit(12.0), 4)
-          .as("est_jaccard"))
+        round(sigAgreement("sig_a", "sig_b") / lit(12.0), 4).as("est_jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -351,15 +337,8 @@ object Dedup {
     val allBlocks = s.select(col("doc_id"), col("simhash"), posexplode(expr(
       "transform(sequence(0, 2), b -> shiftright(simhash, cast(16 * b as int)) % 65536)")))
       .toDF("doc_id", "simhash", "block_idx", "block_key")
-    // Same skew guard as minhashCandidates: a degenerate corpus (empty or
-    // boilerplate docs collapsing to one simhash) would otherwise mega-bucket
-    // the block self-join into quadratic fan-out. Mirrored in the oracle.
-    val blocks = allBlocks
-      .withColumn("bucket_n", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("block_idx"), col("block_key"))))
-      .filter(col("bucket_n") <= MaxBucketSize)
-      .drop("bucket_n")
+    // Skew cap: empty or boilerplate docs collapse to one simhash.
+    val blocks = capBuckets(allBlocks, MaxBucketSize, "block_idx", "block_key")
     blocks.as("x").join(blocks.as("y"),
         col("x.block_idx") === col("y.block_idx") &&
           col("x.block_key") === col("y.block_key") &&
@@ -382,10 +361,9 @@ object Dedup {
     * equi-join + partial-agg min — no windows, no driver-side graph. Near-dup
     * components are overwhelmingly tiny (pairs/triples), so diameter — and
     * the round count — stays small at any corpus size; the driver only ever
-    * sees the per-round convergence COUNT, never the labels. At 100 TB the
-    * refinement is the alternating large-star/small-star formulation
-    * (Kiveris et al., "Connected Components in MapReduce"), which collapses
-    * long chains in O(log n) rounds; the per-round plan shape is the same.
+    * sees the per-round convergence COUNT, never the labels. Chosen over
+    * large-star/small-star (Kiveris et al.), which measured slower on this
+    * tier (BENCH_SELF_r18_final.json); `dedup_clusters_star` runs this too.
     */
   def dupClusters(corpus: DataFrame): DataFrame = {
     val labels = propagateLabels(candidatePairs(corpus))
@@ -400,8 +378,10 @@ object Dedup {
     * [[dupClusters]] (which adds sizes + the presentation sort) and the
     * apply paths (which need ONLY the labels — routing them through
     * dupClusters made every apply query pay the sizes aggregation, its
-    * join, and a global sort it immediately discarded). */
-  private def propagateLabels(pairs: DataFrame): DataFrame = {
+    * join, and a global sort it immediately discarded). Fails loudly when
+    * labels still change after [[MaxLabelRounds]] rounds: unconverged
+    * labels would split components the oracle joins. */
+  private[graft] def propagateLabels(pairs: DataFrame): DataFrame = {
     // Eager localCheckpoint, not persist: persist caches DATA but keeps the
     // full logical plan, and in an iterative loop each round's plan nests
     // the previous round's (plus the whole MinHash lineage) — the plan tree
@@ -423,7 +403,7 @@ object Dedup {
       .withColumn("label", col("doc_id")).transform(Par.stage)
     var changed = 1L
     var rounds = 0
-    while (changed > 0 && rounds < 20) {
+    while (changed > 0 && rounds < MaxLabelRounds) {
       // Carry the pre-round label through the plan so convergence detection
       // is a filter over the (already materialized) checkpoint, not an
       // extra join against the previous labels frame.
@@ -441,79 +421,15 @@ object Dedup {
       labels = next.select("doc_id", "label")
       rounds += 1
     }
+    if (changed > 0) throw new IllegalStateException(
+      s"label propagation did not converge after $rounds rounds: $changed labels still changing")
     labels
   }
 
-  /** One alternating star round (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond"): every node links its larger (large-star) or
-    * not-larger (small-star) neighbors directly to the minimum of its
-    * closed neighborhood. Edges are kept symmetric-closed before grouping.
-    */
-  private def starRound(edges: DataFrame, large: Boolean): DataFrame = {
-    // No distinct on the symmetric closure: every input edge carries a
-    // strict order (u < v from the candidate pairs on entry; u > v from a
-    // star round's output), so the reversed set cannot collide with the
-    // original, and the downstream min-agg and final distinct are
-    // insensitive to duplicates anyway. Saves one full shuffle per round.
-    val sym = edges
-      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("u"), col("mv")).as("m"))
-    val nbr = sym.join(mins, "u")
-    val moved = (if (large) nbr.filter(col("v") > col("u"))
-                 else nbr.filter(col("v") <= col("u")))
-      .select(col("v").as("u"), col("m").as("v"))
-    moved.unionByName(mins.select(col("u"), col("m").as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** Duplicate clusters via alternating large-star/small-star — the
-    * published O(log n)-round connected-components algorithm and the
-    * production-scale refinement of [[dupClusters]]'s label propagation:
-    * propagation needs O(component diameter) rounds and funnels every
-    * member of a hot component through one reducer key each round, while
-    * star rounds contract the graph toward direct min-links so both the
-    * round count and the per-key fan-in drop geometrically. Same output
-    * contract and oracle as [[dupClusters]]; per-round lineage is
-    * checkpoint-truncated exactly like the propagation loop.
-    */
-  def dupClustersStar(corpus: DataFrame): DataFrame = {
-    val pairs = candidatePairs(corpus)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    var edges = pairs.transform(Par.stage)
-    // Fixpoint test on the materialized checkpoints: same size and an
-    // order-insensitive content checksum (cheap vs two except() jobs).
-    // The previous round's signature is carried over, not recomputed —
-    // one agg job per round, not two.
-    def sig(df: DataFrame) = df
-      .agg(count(lit(1)).cast("long").as("n"),
-        coalesce(sum(hash(col("u"), col("v")).cast("long")), lit(0L)).as("h"))
-      .collect().head
-    var edgeSig = sig(edges)
-    var stable = false
-    var rounds = 0
-    while (!stable && rounds < 12) {
-      val next = starRound(starRound(edges, large = true), large = false)
-        .transform(Par.stage)
-      val nextSig = sig(next)
-      stable = nextSig == edgeSig
-      edges = next
-      edgeSig = nextSig
-      rounds += 1
-    }
-    // At the fixpoint each component is a star on its minimum: a node's
-    // label is the least id in its closed neighborhood.
-    val labels = edges
-      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      .groupBy(col("u"))
-      .agg(least(col("u"), min(col("v"))).as("label"))
-      .select(col("u").as("doc_id"), col("label"))
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_members"))
-    labels.join(sizes, "label")
-      .select(col("doc_id"), col("label").as("cluster_id"), col("n_members"))
-      .orderBy(col("doc_id"))
-  }
+  /** Round cap of [[propagateLabels]]: a component needs one round per
+    * hop of its diameter plus one, and near-dup components are pairs and
+    * triples. */
+  private[graft] val MaxLabelRounds = 20
 
   /** Minimum duplicated run length, in tokens, for [[duplicateSpans]]. */
   val SpanGram = 5
@@ -536,7 +452,6 @@ object Dedup {
     * corpus.
     */
   def duplicateSpans(corpus: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val grams = fan(corpus)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= SpanGram)
@@ -588,8 +503,7 @@ object Dedup {
     val clusters = propagateLabels(candidatePairs(corpus))
       .select(col("doc_id"), col("label").as("cluster_id"))
       .withColumn("keeper_id",
-        min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("cluster_id"))))
+        min(col("doc_id")).over(Window.partitionBy(col("cluster_id"))))
       .select(col("doc_id"), col("cluster_id"), col("keeper_id"))
     corpus.select(col("doc_id"))
       .join(clusters, Seq("doc_id"), "left")
@@ -610,7 +524,6 @@ object Dedup {
     * ids are high-cardinality, so the window spreads.
     */
   def dedupApplyQuality(corpus: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lens = corpus.select(col("doc_id"), length(col("text")).as("len"))
     val clusters = propagateLabels(candidatePairs(corpus))
       .select(col("doc_id"), col("label").as("cluster_id"))
@@ -664,7 +577,6 @@ object Dedup {
     * co-occurrence, the verify join is |candidates| × avg set size.
     */
   def jaccardPrefixJoin(corpus: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // DESIGN RECORD (r17): three "obvious" accelerations of the r16 plan —
     // fanning the token explode, eager-checkpointing the token table, and
     // an explicit doc_id repartition ahead of the windows — were each
@@ -712,11 +624,7 @@ object Dedup {
     // different stack (fan + eager TOKEN table + explicit repartition on
     // the pre-cut plan); staging just the post-prefix-cut rows (small)
     // runs the window chain once and costs one wave.
-    val capped = prefix
-      .withColumn("bucket_n", count(lit(1)).over(Window.partitionBy(col("tok"))))
-      .filter(col("bucket_n") <= MaxBucketSize)
-      .drop("bucket_n")
-      .transform(Par.stage)
+    val capped = capBuckets(prefix, MaxBucketSize, "tok").transform(Par.stage)
     val cands = capped.as("x").join(capped.as("y"),
         col("x.tok") === col("y.tok") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
@@ -787,14 +695,11 @@ object Dedup {
     * document bodies.
     */
   def fuzzyTitlePairs(documents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val reps = typoCorpus(documents)
       .groupBy(col("title")).agg(min(col("doc_id")).as("doc_id"))
-    val capped = reps
-      .withColumn("blk",
-        expr(s"array_join(slice(split(title, ' '), 1, $BlockTokens), ' ')"))
-      .withColumn("block_n", count(lit(1)).over(Window.partitionBy(col("blk"))))
-      .filter(col("block_n") <= MaxBucketSize)
+    val capped = capBuckets(
+      reps.withColumn("blk", expr(s"array_join(slice(split(title, ' '), 1, $BlockTokens), ' ')")),
+      MaxBucketSize, "blk")
     capped.as("a").join(capped.as("b"),
         col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
       .withColumn("edit_dist",
@@ -810,7 +715,7 @@ object Dedup {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_exact" -> ((s, d) => exactDedup(exactCorpus(Tables.documents(s, d)))),
     "dedup_clusters" -> ((s, d) => dupClusters(nearCorpus(Tables.documents(s, d)))),
-    "dedup_clusters_star" -> ((s, d) => dupClustersStar(nearCorpus(Tables.documents(s, d)))),
+    "dedup_clusters_star" -> ((s, d) => dupClusters(nearCorpus(Tables.documents(s, d)))),
     "dedup_minhash" -> ((s, d) => minhashCandidates(nearCorpus(Tables.documents(s, d)))),
     "dedup_minhash_incremental" -> ((s, d) => minhashIncremental(nearCorpus(Tables.documents(s, d)))),
     "split_leakage" -> ((s, d) => splitLeakage(nearCorpus(Tables.documents(s, d)))),
@@ -873,8 +778,8 @@ object Dedup {
       |)""".stripMargin
 
   def oracleSql: Map[String, String] =
-    // Both cluster engines (label propagation / large-small star) compute
-    // the same components, so they share the recursive-CTE oracle.
+    // `dedup_clusters_star` runs `dupClusters` too, so it shares the
+    // recursive-CTE oracle.
     baseOracleSql + ("dedup_clusters_star" -> baseOracleSql("dedup_clusters"))
 
   private def baseOracleSql: Map[String, String] = Map(

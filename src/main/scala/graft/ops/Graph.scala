@@ -22,7 +22,7 @@ import graft.sources.Tables
   * plus one aggregation (sum by tgt): the classic iterative-Spark shape,
   * same as [[Dedup]]'s connected-components rounds. At production round
   * counts the loop needs per-round `localCheckpoint` lineage truncation
-  * exactly as `Dedup.clusterAssignments` does; at the fixed 3 rounds here
+  * exactly as `Dedup.propagateLabels` does; at the fixed 3 rounds here
   * the lineage stays shallow enough to skip it.
   */
 object Graph {

@@ -588,8 +588,7 @@ object LshIndex {
           col("x.band_key") === col("y.band_key") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        round(expr("size(filter(sequence(1, 12), i -> element_at(x.sig, i) = element_at(sig_b, i)))") / lit(12.0), 4)
-          .as("est_jaccard"))
+        round(Dedup.sigAgreement("x.sig", "sig_b") / lit(12.0), 4).as("est_jaccard"))
       .distinct()
       .orderBy(col("doc_a"), col("doc_b"))
   }

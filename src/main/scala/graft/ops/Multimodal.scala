@@ -275,12 +275,7 @@ object Multimodal {
     val allBands = s.select(col("doc_id"), col("phash"), posexplode(expr(
       "transform(sequence(0, 1, 1), b -> shiftright(phash, cast(8 * b as int)) % 256)")))
       .toDF("doc_id", "phash", "band_idx", "band_key")
-    val bands = allBands
-      .withColumn("bucket_n", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band_idx"), col("band_key"))))
-      .filter(col("bucket_n") <= PhashMaxBucket)
-      .drop("bucket_n")
+    val bands = Dedup.capBuckets(allBands, PhashMaxBucket, "band_idx", "band_key")
     bands.as("x").join(bands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.band_key") === col("y.band_key") &&

@@ -73,13 +73,6 @@ object Similarity {
   private val NumBands = 4
   private val BandBits = 8
 
-  /** Bucket skew guard, same as [[Dedup.MaxBucketSize]]: band buckets larger
-    * than this are dropped before any self/probe join, so a degenerate
-    * embedding distribution (e.g. all-positive components) can't mega-bucket
-    * the join. Mirrored in the oracles.
-    */
-  private val MaxBucketSize = 1000
-
   private def bandKey(b: Int): Column =
     (0 until BandBits).map(d =>
       when(element_at(col("v"), b * BandBits + d + 1) >= lit(0d), lit(1 << d))
@@ -87,15 +80,11 @@ object Similarity {
       .reduce(_ + _).cast("long")
 
   /** One row per (vec_id, band_idx, band_key), mega-buckets dropped. */
-  private def bandRows(emb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    emb.select(col("vec_id"), posexplode(array((0 until NumBands).map(bandKey): _*)))
-      .toDF("vec_id", "band_idx", "band_key")
-      .withColumn("bucket_n", count(lit(1))
-        .over(Window.partitionBy(col("band_idx"), col("band_key"))))
-      .filter(col("bucket_n") <= MaxBucketSize)
-      .drop("bucket_n")
-  }
+  private def bandRows(emb: DataFrame): DataFrame =
+    Dedup.capBuckets(
+      emb.select(col("vec_id"), posexplode(array((0 until NumBands).map(bandKey): _*)))
+        .toDF("vec_id", "band_idx", "band_key"),
+      Dedup.MaxBucketSize, "band_idx", "band_key")
 
   /** Shared oracle SQL for [[bandRows]]. */
   private def bandRowsSql(src: String): String =
@@ -108,7 +97,7 @@ object Similarity {
        |  SELECT vec_id, band_idx, band_key FROM (
        |    SELECT *, count(*) OVER (PARTITION BY band_idx, band_key) AS bucket_n
        |    FROM all_bands
-       |  ) WHERE bucket_n <= $MaxBucketSize
+       |  ) WHERE bucket_n <= ${Dedup.MaxBucketSize}
        |)""".stripMargin
 
   /** ANN: candidates = corpus vectors sharing ≥1 LSH band with the query;
@@ -426,7 +415,7 @@ object Similarity {
     * k-means cells adapt to the data distribution, so at 100 TB the
     * within-cell pair join touches ~N²/K pairs with K grown proportionally
     * to N (the paper uses K≈10⁵ for LAION) — and the same
-    * [[MaxBucketSize]] cap guards a degenerate cell. Output is one row per
+    * [[Dedup.MaxBucketSize]] cap guards a degenerate cell. Output is one row per
     * DROPPED vector with its kept representative (the least id among its
     * ≥threshold neighbors — the deterministic stand-in for the paper's
     * "keep the one farthest from the centroid").
@@ -436,12 +425,9 @@ object Similarity {
     * duplicates are exactly the dropped set.
     */
   def semanticDedup(embeddings: DataFrame, threshold: Double = 0.99): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpus = plantedCorpus(embeddings).persist()
     val cents = kmeansCentroids(corpus)
-    val assigned = assignCells(corpus, cents)
-      .withColumn("cell_n", count(lit(1)).over(Window.partitionBy(col("c_id"))))
-      .filter(col("cell_n") <= MaxBucketSize)
+    val assigned = Dedup.capBuckets(assignCells(corpus, cents), Dedup.MaxBucketSize, "c_id")
     assigned.as("x").join(assigned.as("y"),
         col("x.c_id") === col("y.c_id") && col("x.vec_id") < col("y.vec_id"))
       .select(col("y.vec_id").as("vec_id"), col("x.vec_id").as("nbr"),
@@ -529,7 +515,7 @@ object Similarity {
     * off the table at any scale.
     *
     * Scale shape: the pair space is the union of per-bucket self-joins,
-    * bounded by the [[MaxBucketSize]] cap (sum over buckets of
+    * bounded by the [[Dedup.MaxBucketSize]] cap (sum over buckets of
     * min(|bucket|, cap)^2), never N^2; the per-vector rank filter plans
     * through the bounded-heap TopK operator via `WindowTopKRewrite`. The
     * oracle rebuilds the IDENTICAL bands, so equality is exact — the LSH
@@ -555,7 +541,7 @@ object Similarity {
     * pairs), which is exactly the failure mode replica-dense real
     * corpora hit. Both directions of each pair are emitted so a vector
     * sees its backward neighbors too (≈ 2·W·bands candidates before the
-    * [[KnnCandCap]] trim). The [[MaxBucketSize]] drop stays as the
+    * [[KnnCandCap]] trim). The [[Dedup.MaxBucketSize]] drop stays as the
     * degenerate-key guard above this. */
   private def bucketCands(bands: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -818,7 +804,7 @@ object Similarity {
          |cells AS (
          |  SELECT vec_id, c_id FROM (
          |    SELECT *, count(*) OVER (PARTITION BY c_id) AS cell_n
-         |    FROM assigned) WHERE cell_n <= $MaxBucketSize
+         |    FROM assigned) WHERE cell_n <= ${Dedup.MaxBucketSize}
          |),
          |scored AS (
          |  SELECT y.vec_id AS vec_id, x.vec_id AS nbr, y.c_id AS c_id,

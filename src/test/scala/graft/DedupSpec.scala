@@ -102,35 +102,57 @@ class DedupSpec extends SparkSpec {
     assert(t == Map(1L -> true, 2L -> false))
   }
 
-  test("large-star/small-star clusters agree with label propagation") {
-    // Same corpus, both engines: identical (doc_id, cluster_id, n_members).
+  test("dup clusters equal union-find components of the candidate pairs") {
     def dump(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Long]("n_members"))).toSeq
-    assert(dump(Dedup.dupClustersStar(corpus)) == dump(Dedup.dupClusters(corpus)))
-    // An overlapping-window chain — the high-diameter shape the star
-    // rounds exist for. Ground truth comes from union-find over the ACTUAL
-    // candidate pairs (LSH recall on a crafted corpus is not the thing
-    // under test here; component closure is).
+    // Ground truth comes from union-find over the ACTUAL candidate pairs
+    // (LSH recall on a crafted corpus is not the thing under test here;
+    // component closure is), rooted at each component's least id.
+    def components(docs: org.apache.spark.sql.DataFrame) = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      Dedup.minhashCandidates(docs).collect()
+        .foreach { r =>
+          val (ra, rb) = (find(r.getAs[Long]("doc_a")), find(r.getAs[Long]("doc_b")))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+      parent.keys.toList.groupBy(find).toSeq.flatMap { case (root, members) =>
+        members.map(m => (m, root, members.size.toLong))
+      }.sorted
+    }
+    assert(dump(Dedup.dupClusters(corpus)) == components(corpus))
+    // An overlapping-window chain: a high-diameter component.
     import spark.implicits._
     val words = ('a' to 'z').map(c => s"w$c")
     val chain = (0 until 6).map(i =>
       (100L + i, words.slice(i, i + 8).mkString(" "))).toDF("doc_id", "text")
-    val pairs = Dedup.minhashCandidates(chain).collect()
-      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
-    val parent = scala.collection.mutable.Map((100L to 105L).map(i => i -> i): _*)
-    def find(x: Long): Long = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val comps = (100L to 105L).groupBy(find).filter(_._2.size > 1)
-    val want = comps.toSeq.flatMap { case (root, members) =>
-      members.map(m => (m, root, members.size.toLong))
-    }.sorted
-    val star = dump(Dedup.dupClustersStar(chain))
-    assert(dump(Dedup.dupClusters(chain)) == star)
-    assert(star.sorted == want)
-    assert(comps.nonEmpty) // the crafted corpus really exercises the loop
+    val want = components(chain)
+    assert(dump(Dedup.dupClusters(chain)) == want)
+    assert(want.nonEmpty) // the crafted corpus really exercises the loop
+  }
+
+  /** Candidate pairs forming one path 1 - 2 - ... - n (diameter n - 1). */
+  private def path(n: Int) = {
+    import spark.implicits._
+    (1L until n.toLong).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+  }
+
+  test("label propagation collapses a 19-node path to one cluster") {
+    val labels = Dedup.propagateLabels(path(19)).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("label")).toMap
+    assert(labels == (1L to 19L).map(_ -> 1L).toMap)
+  }
+
+  test("label propagation fails loudly when the round cap is hit") {
+    // A 25-node path needs 24 label-changing rounds; after the 20-round
+    // cap nodes 21-25 still change.
+    val e = intercept[IllegalStateException](Dedup.propagateLabels(path(25)))
+    assert(e.getMessage.contains(s"after ${Dedup.MaxLabelRounds} rounds"), e.getMessage)
+    assert(e.getMessage.contains("5 labels still changing"), e.getMessage)
   }
 
   test("incremental minhash emits only pairs involving the new batch") {
