@@ -723,14 +723,12 @@ object ScaleSmoke {
         200, 1, 1L, UTF8String.fromString("s"), UTF8String.fromString("r"),
         UTF8String.fromString("u"), UTF8String.fromString("web"),
         1000000L * i)
-      val b = graft.sources.AvroCodec.encode(rec, vals(_), _ => false)
-      val os = new java.io.FileOutputStream(new java.io.File(dir, name))
-      try {
-        os.write(Array[Byte]((b.length >>> 24).toByte, (b.length >>> 16).toByte,
-          (b.length >>> 8).toByte, b.length.toByte))
-        os.write(b)
-        graft.sources.GavroFooter.write(os, Seq(0L), Seq.empty)
-      } finally os.close()
+      val w = new graft.sources.GavroFileWriter(new java.io.File(dir, name),
+        graft.sources.GavroFileWriter.Layout(graft.sources.Gavro.DefaultBlockBytes,
+          0, Seq.empty, Seq.empty))
+      w.append(graft.sources.AvroCodec.encode(rec, vals(_), _ => false),
+        org.apache.spark.sql.catalyst.InternalRow.empty)
+      w.commit()
       graft.sources.Gavro.commitBatch(dir, Seq(name))
       name
     }

@@ -309,24 +309,23 @@ class GavroWriteBuilder(path: String, schemaName: String, in: StructType,
     blockBytes: Long, codec: Byte = 0, bloomCols: Seq[String] = Seq.empty)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
-  // Fail on the driver, at build time: an unknown or double bloom column
-  // is a caller bug, not something to discover per task.
-  Gavro.bloomFieldsOf(AvroCodec.schemaByName(schemaName), bloomCols)
+  // Fail on the driver, at build time: a frame that is not the record, or
+  // an unknown or double bloom column, is a caller bug, not something to
+  // discover per task.
+  private val expected = AvroCodec.sqlType(AvroCodec.schemaByName(schemaName))
+  require(in.length == expected.length &&
+    in.fields.zip(expected.fields).forall { case (a, b) =>
+      a.name == b.name && a.dataType == b.dataType },
+    s"gavro write: frame schema ${in.simpleString} does not match " +
+      s"'$schemaName' ${expected.simpleString}")
+  GavroFileWriter.bloomColumns(expected, bloomCols)
   private var overwrite = false
   override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
     overwrite = true; this
   }
-  override def buildForBatch(): org.apache.spark.sql.connector.write.BatchWrite = {
-    val record = AvroCodec.schemaByName(schemaName)
-    val expected = AvroCodec.sqlType(record)
-    require(in.length == expected.length &&
-      in.fields.zip(expected.fields).forall { case (a, b) =>
-        a.name == b.name && a.dataType == b.dataType },
-      s"gavro write: frame schema ${in.simpleString} does not match " +
-        s"'$schemaName' ${expected.simpleString}")
+  override def buildForBatch(): org.apache.spark.sql.connector.write.BatchWrite =
     new GavroBatchWrite(path, schemaName, overwrite, blockBytes, codec,
       bloomCols)
-  }
 
   /** Streaming sink: the archiver itself as `writeStream.format("gavro")`.
     * Files are published per epoch as `part-e<epoch>-<partition>.gavro` —
@@ -337,16 +336,8 @@ class GavroWriteBuilder(path: String, schemaName: String, in: StructType,
     * duplicating data — exactly-once at the file level, the same
     * discipline as Spark's own file sink without its manifest log). */
   override def buildForStreaming()
-      : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    val record = AvroCodec.schemaByName(schemaName)
-    val expected = AvroCodec.sqlType(record)
-    require(in.length == expected.length &&
-      in.fields.zip(expected.fields).forall { case (a, b) =>
-        a.name == b.name && a.dataType == b.dataType },
-      s"gavro write: frame schema ${in.simpleString} does not match " +
-        s"'$schemaName' ${expected.simpleString}")
+      : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
     new GavroStreamingWrite(path, schemaName, blockBytes, codec, bloomCols)
-  }
 }
 
 class GavroStreamingWrite(path: String, schemaName: String, blockBytes: Long,
@@ -414,35 +405,14 @@ class GavroBatchWrite(path: String, schemaName: String, overwrite: Boolean,
   override def commit(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
     val d = new java.io.File(path)
-    if (overwrite) {
-      Gavro.dataStore.list(d)
-        .filter(_.getName.endsWith(".gavro"))
-        .foreach(Gavro.dataStore.delete)
-      // a truncate invalidates every prior commit record too
-      Gavro.store.list(new java.io.File(d, Gavro.CommitsDir))
-        .foreach(Gavro.store.delete)
-    }
-    def nextPartIdx(): Int = Gavro.dataStore.list(d)
-      .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".gavro"))
-      .flatMap(n => n.stripPrefix("part-").stripSuffix(".gavro").toIntOption)
-      .foldLeft(-1)(math.max) + 1
+    if (overwrite) Gavro.clearTable(d)
     // Data files publish put-if-absent too (the coordination seam's
     // staged-blob publish, retry on the next index): two concurrent batch
     // writers that both computed part-00005 must not clobber each other's
     // bytes — the commit record only protects visibility, not the file
     // contents.
     val published = messages.collect { case GavroTempFile(tmp) => tmp }
-      .sorted.map { tmp =>
-        var landed: Option[String] = None
-        while (landed.isEmpty) {
-          val dst = new java.io.File(d, f"part-${nextPartIdx()}%05d.gavro")
-          if (Gavro.store.publishIfAbsent(new java.io.File(tmp), dst)) {
-            Gavro.dataStore.delete(new java.io.File(tmp))
-            landed = Some(dst.getName)
-          }
-        }
-        landed.get
-      }
+      .sorted.map(tmp => Gavro.landNextPart(d, new java.io.File(tmp)))
     // visibility point: one commit record for the whole batch (readers
     // with a commit log never see a torn multi-file publish); sequence
     // allocation retries on concurrent-writer collision
@@ -469,19 +439,8 @@ class GavroDataWriter(path: String, schemaName: String, partitionId: Int,
     codec: Byte = 0, bloomCols: Seq[String] = Seq.empty)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
   private val record = AvroCodec.schemaByName(schemaName)
-  private val types = AvroCodec.sqlType(record).fields.map(_.dataType)
-  // Stats on every pushdown-eligible scalar field, by record ordinal.
-  private val statFields: Array[(Int, Byte)] = record.fields.zipWithIndex
-    .flatMap { case (f, i) =>
-      (AvroCodec.unwrapNull(f.tpe) match {
-        case AvroCodec.ALong => Some(0: Byte)
-        case AvroCodec.ADouble => Some(1: Byte)
-        case AvroCodec.AString => Some(2: Byte)
-        case AvroCodec.ABoolean => Some(3: Byte)
-        case AvroCodec.AInt => Some(4: Byte)
-        case _ => None
-      }).map(i -> _)
-    }.toArray
+  private val schema = AvroCodec.sqlType(record)
+  private val types = schema.fields.map(_.dataType)
   private val dir = { val d = new java.io.File(path); d.mkdirs(); d }
   // Staged under a dot-name (hidden from data listings) with a unique
   // suffix; written through the data-plane seam, published by the
@@ -489,72 +448,14 @@ class GavroDataWriter(path: String, schemaName: String, partitionId: Int,
   private val tmp = new java.io.File(dir,
     f".write-$partitionId%05d-$taskId-" +
       java.util.UUID.randomUUID().toString.take(8) + ".gavro.tmp")
-  private val out = Gavro.dataStore.create(tmp)
-  private val blocks = scala.collection.mutable.ArrayBuffer(0L)
-  private val blockStats =
-    scala.collection.mutable.ArrayBuffer.empty[Seq[(String, GavroColStat)]]
-  // Records accumulate in a per-block buffer; on block roll the buffer is
-  // flushed (through the codec when one is set) and the next block's FILE
-  // offset recorded. blockBytes measures the UNCOMPRESSED payload, so the
-  // per-task decode work a block represents is codec-independent; the
-  // footer offsets are file (compressed) positions, so split planning and
-  // range reads never care which codec wrote the file.
-  private var fileOffset = 0L
-  private var blockBuf = new java.io.ByteArrayOutputStream(
-    math.min(blockBytes, 4L << 20).toInt)
-  private var fileAcc = new GavroWriteStatAcc(record, statFields)
-  private var blockAcc = new GavroWriteStatAcc(record, statFields)
-  // Per-block bloom builders over the requested columns ([[GavroBloom]]);
-  // value access mirrors the stat acc's typed ordinal reads.
-  private val bloomFields: Array[(Int, Byte)] =
-    Gavro.bloomFieldsOf(record, bloomCols)
-  private val blockBlooms =
-    scala.collection.mutable.ArrayBuffer.empty[Seq[(String, GavroBloom)]]
-  private def newBloomAcc() = bloomFields.map { case (ord, tpe) =>
-    record.fields(ord).name -> new GavroBloom.Builder(tpe) }
-  private var bloomAcc = newBloomAcc()
-  private def absorbBlooms(row: InternalRow): Unit = {
-    var i = 0
-    while (i < bloomFields.length) {
-      val (ord, tpe) = bloomFields(i)
-      if (!row.isNullAt(ord)) bloomAcc(i)._2.add(tpe match {
-        case 0 => row.getLong(ord)
-        case 2 => row.getUTF8String(ord)
-        case 3 => row.getBoolean(ord)
-        case 4 => row.getInt(ord)
-      })
-      i += 1
-    }
-  }
+  // Stats on every pushdown-eligible scalar field, by record ordinal.
+  private val file = new GavroFileWriter(tmp, GavroFileWriter.Layout(
+    blockBytes, codec, GavroFileWriter.allStatColumns(schema),
+    GavroFileWriter.bloomColumns(schema, bloomCols)))
 
-  private def flushBlock(): Unit = if (blockBuf.size() > 0) {
-    // empty-buffer guard: a codec applied to zero bytes still emits a
-    // frame, which would leave a phantom non-empty trailing block
-    val payload = Gavro.compress(codec, blockBuf.toByteArray)
-    out.write(payload)
-    fileOffset += payload.length
-    blockBuf = new java.io.ByteArrayOutputStream(
-      math.min(blockBytes, 4L << 20).toInt)
-  }
-
-  private var wroteAny = false
-
-  override def write(row: InternalRow): Unit = {
-    if (blockBuf.size() >= blockBytes) {
-      flushBlock()
-      blocks += fileOffset
-      blockStats += blockAcc.result()
-      blockAcc = new GavroWriteStatAcc(record, statFields)
-      blockBlooms += bloomAcc.map(e => e._1 -> e._2.result()).toSeq
-      bloomAcc = newBloomAcc()
-    }
-    val b = AvroCodec.encode(record, i => row.get(i, types(i)), row.isNullAt)
-    blockBuf.write(Array[Byte]((b.length >>> 24).toByte, (b.length >>> 16).toByte,
-      (b.length >>> 8).toByte, b.length.toByte))
-    blockBuf.write(b)
-    wroteAny = true
-    fileAcc.absorb(row); blockAcc.absorb(row); absorbBlooms(row)
-  }
+  override def write(row: InternalRow): Unit =
+    file.append(AvroCodec.encode(record, i => row.get(i, types(i)), row.isNullAt),
+      row)
 
   /** Hook: the streaming factory wraps the temp path in an epoch-aware
     * message; the batch path uses the plain one. */
@@ -569,62 +470,17 @@ class GavroDataWriter(path: String, schemaName: String, partitionId: Int,
     // slot, most slots untouched by a small delta) would otherwise land
     // dozens of empty files per trigger. Both commit paths ignore the
     // no-file message.
-    if (!wroteAny) {
-      out.close()
-      Gavro.dataStore.delete(tmp)
-      return GavroNoFile
+    if (file.isEmpty) {
+      file.abort()
+      GavroNoFile
+    } else {
+      file.commit()
+      commitMessage(tmp.getAbsolutePath)
     }
-    flushBlock()
-    blockStats += blockAcc.result()
-    blockBlooms += bloomAcc.map(e => e._1 -> e._2.result()).toSeq
-    GavroFooter.write(out, blocks.toSeq, fileAcc.result(),
-      if (statFields.nonEmpty) blockStats.toSeq else Seq.empty, codec,
-      if (bloomFields.nonEmpty) blockBlooms.toSeq else Seq.empty)
-    out.close()
-    commitMessage(tmp.getAbsolutePath)
   }
 
-  override def abort(): Unit = { out.close(); Gavro.dataStore.delete(tmp); () }
+  override def abort(): Unit = file.abort()
   override def close(): Unit = ()
-}
-
-/** Running min/max over InternalRow values (nulls skipped); string values
-  * are stored as JVM strings for the footer codec. */
-class GavroWriteStatAcc(record: AvroCodec.ARecord,
-    statFields: Array[(Int, Byte)]) {
-  private val mins = new Array[Any](statFields.length)
-  private val maxs = new Array[Any](statFields.length)
-  private def lt(t: Byte, a: Any, b: Any): Boolean = t match {
-    case 0 => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-    case 1 => // NaN greatest, ±0.0 equal — one rule for every double site
-      Gavro.sparkDoubleLt(a.asInstanceOf[Double], b.asInstanceOf[Double])
-    case 2 => a.asInstanceOf[String] < b.asInstanceOf[String]
-    case 3 => !a.asInstanceOf[Boolean] && b.asInstanceOf[Boolean]
-    case 4 => a.asInstanceOf[Int] < b.asInstanceOf[Int]
-  }
-  def absorb(row: InternalRow): Unit = {
-    var i = 0
-    while (i < statFields.length) {
-      val (ord, tpe) = statFields(i)
-      if (!row.isNullAt(ord)) {
-        val v0 = tpe match {
-          case 0 => row.getLong(ord)
-          case 1 => row.getDouble(ord)
-          case 2 => row.getUTF8String(ord).toString
-          case 3 => row.getBoolean(ord)
-          case 4 => row.getInt(ord)
-        }
-        if (mins(i) == null || lt(tpe, v0, mins(i))) mins(i) = v0
-        if (maxs(i) == null || lt(tpe, maxs(i), v0)) maxs(i) = v0
-      }
-      i += 1
-    }
-  }
-  def result(): Seq[(String, GavroColStat)] =
-    statFields.indices.filter(i => mins(i) != null).map { i =>
-      record.fields(statFields(i)._1).name ->
-        GavroColStat(statFields(i)._2, mins(i), maxs(i))
-    }
 }
 
 /** Scan-level observability (DSv2 custom metrics): decoded-record and
@@ -1283,7 +1139,8 @@ object GavroSortedVals {
     if (vs.isEmpty) vs
     else vs.head match {
       case _: String if vs.forall(_.isInstanceOf[String]) =>
-        GavroSortedVals(vs.asInstanceOf[Seq[String]].sorted.toVector)
+        GavroSortedVals(vs.asInstanceOf[Seq[String]]
+          .sortWith(GavroColStat.compareStrings(_, _) < 0).toVector)
       case (_: Int | _: Long)
           if vs.forall(v => v.isInstanceOf[Int] || v.isInstanceOf[Long]) =>
         GavroSortedVals(
@@ -1351,14 +1208,21 @@ object GavroPred {
   }
 
   /** The smallest string strictly greater than every string with prefix
-    * `p`, in code-unit order (the order the footer stats compare in):
-    * increment p's last code unit, dropping trailing U+FFFF units first.
-    * None when p is all U+FFFF — no finite upper bound exists. */
+    * `p`, in code-point order (the order the footer stats compare in):
+    * increment p's last code point, dropping trailing U+10FFFF first and
+    * stepping over the surrogate range (U+D7FF is followed by U+E000).
+    * None when p is all U+10FFFF — no finite upper bound exists. */
   private[sources] def prefixUpperBound(p: String): Option[String] = {
-    var i = p.length - 1
-    while (i >= 0 && p.charAt(i) == '\uffff') i -= 1
-    if (i < 0) None
-    else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
+    var end = p.length
+    while (end > 0 && p.codePointBefore(end) == Character.MAX_CODE_POINT)
+      end -= 2
+    if (end == 0) None
+    else {
+      val cp = p.codePointBefore(end)
+      val next = if (cp == 0xd7ff) 0xe000 else cp + 1
+      Some(p.substring(0, end - Character.charCount(cp)) +
+        new String(Character.toChars(next)))
+    }
   }
 }
 
@@ -1401,10 +1265,45 @@ case class GavroKeyedPartition(part: GavroInputPartition, keyValue: Any)
 }
 
 /** Per-column min/max for footer stats. `tpe`: 0=long 1=double 2=string
-  * 3=boolean 4=int (ints travel as longs). Strings are UTF-8; comparison
-  * on the ASCII field values this source carries matches UTF8String's
-  * binary order. */
+  * 3=boolean 4=int (ints travel as longs). Values compare in Spark's
+  * order ([[GavroColStat.lt]]): strings by UTF-8 bytes, i.e. by code
+  * point, the order of UTF8String and of the reader's row evaluation;
+  * doubles with NaN greatest and -0.0 equal to 0.0. */
 case class GavroColStat(tpe: Byte, min: Any, max: Any) extends Serializable
+
+object GavroColStat {
+  /** Code-point order on JVM strings, without encoding them. UTF-16
+    * code-unit order agrees with it except where a surrogate (half of a
+    * code point above U+FFFF) meets a unit in U+E000..U+FFFF, so those
+    * two ranges trade places before the units compare. */
+  def compareStrings(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n) {
+      val x = a.charAt(i)
+      val y = b.charAt(i)
+      if (x != y) return rank(x) - rank(y)
+      i += 1
+    }
+    a.length - b.length
+  }
+
+  private def rank(c: Char): Int =
+    if (c < '\ud800') c else if (c >= '\ue000') c - 0x800 else c + 0x2000
+
+  /** `a < b` for stat type `tpe`. Strings are both UTF8String (the
+    * writer's row values) or both String (footer values). */
+  def lt(tpe: Byte, a: Any, b: Any): Boolean = tpe match {
+    case 0 | 4 =>
+      a.asInstanceOf[Number].longValue < b.asInstanceOf[Number].longValue
+    case 1 => Gavro.sparkDoubleLt(a.asInstanceOf[Double], b.asInstanceOf[Double])
+    case 2 => (a, b) match {
+      case (x: UTF8String, y: UTF8String) => x.binaryCompare(y) < 0
+      case (x: String, y: String) => compareStrings(x, y) < 0
+    }
+    case 3 => !a.asInstanceOf[Boolean] && b.asInstanceOf[Boolean]
+  }
+}
 
 /** Footer metadata of one `.gavro` file: record-aligned block start
   * offsets, the end of the data section, optional per-file column stats,
@@ -1624,7 +1523,7 @@ object GavroSkip {
         Some(Gavro.compareSparkDoubles(b.doubleValue, a.doubleValue))
       case (a: Number, b: Number) =>
         Some(java.lang.Long.compare(b.longValue, a.longValue))
-      case (a: String, b: String) => Some(b.compareTo(a))
+      case (a: String, b: String) => Some(GavroColStat.compareStrings(b, a))
       case (a: Boolean, b: Boolean) => Some(java.lang.Boolean.compare(b, a))
       case _ => None
     }
@@ -1723,13 +1622,13 @@ object GavroSkip {
           }
           // Prefix scan: records with prefix p lie in [p, upper(p));
           // exclude iff the stats range misses it entirely — max < p, or
-          // min ≥ upper(p). Sound in code-unit order (the order cmp
+          // min ≥ upper(p). Sound in code-point order (the order cmp
           // compares strings in): p is a prefix of s ⟹ p ≤ s < upper(p).
           case "starts" => (s.min, s.max, p.value) match {
             case (mn: String, mx: String, pre: String) =>
-              mx.compareTo(pre) < 0 ||
+              GavroColStat.compareStrings(mx, pre) < 0 ||
                 GavroPred.prefixUpperBound(pre).exists(up =>
-                  mn.compareTo(up) >= 0)
+                  GavroColStat.compareStrings(mn, up) >= 0)
             case _ => false
           }
           case _ => false // null-tests, ends/contains: never skip
@@ -3294,16 +3193,13 @@ object Gavro {
   private def stageFiles(bins: DataFrame, dir: String, blockBytes: Long,
       statCols: Seq[String], blockCodec: String,
       bloomCols: Seq[String] = Seq.empty): Seq[String] = {
-    val codec = codecByte(blockCodec)
-    val statTypes = statTypesOf(bins, statCols)
-    val bloomTypes = bloomTypesOf(bins, bloomCols)
+    val layout = binsLayout(bins, blockBytes, statCols, blockCodec, bloomCols)
     val d = new java.io.File(dir)
-    val tmps = bins.rdd.mapPartitions { it =>
+    val tmps = bins.queryExecution.toRdd.mapPartitions { it =>
       if (it.hasNext) {
         val name = ".rewrite-" +
           java.util.UUID.randomUUID().toString.take(12) + ".gavro.tmp"
-        Gavro.writeRowsFile(it, new java.io.File(dir, name), blockBytes,
-          statTypes, codec, bloomTypes)
+        GavroFileWriter.writeBins(it, new java.io.File(dir, name), layout)
         Iterator.single(name)
       } else Iterator.empty
     }.collect().toSeq
@@ -3314,13 +3210,6 @@ object Gavro {
     * of per-epoch files into scan-efficient units while staying well
     * under a single task's comfortable input. */
   val OptimizeTargetBytes: Long = 64L << 20
-
-  private def statLt(tpe: Byte, a: Any, b: Any): Boolean = tpe match {
-    case 0 | 4 => a.asInstanceOf[Number].longValue < b.asInstanceOf[Number].longValue
-    case 1 => sparkDoubleLt(a.asInstanceOf[Double], b.asInstanceOf[Double])
-    case 2 => a.toString < b.toString
-    case 3 => !a.asInstanceOf[Boolean] && b.asInstanceOf[Boolean]
-  }
 
   /** OPTIMIZE — bin-pack small committed data files into larger ones (the
     * landing-zone small-files problem: a streaming sink dripping one file
@@ -3638,8 +3527,8 @@ object Gavro {
         val ss = bin.map(_._2.stats(c))
         val tpe = ss.head.tpe
         c -> GavroColStat(tpe,
-          ss.map(_.min).reduce((a, b) => if (statLt(tpe, a, b)) a else b),
-          ss.map(_.max).reduce((a, b) => if (statLt(tpe, a, b)) b else a))
+          ss.map(_.min).reduce((a, b) => if (GavroColStat.lt(tpe, a, b)) a else b),
+          ss.map(_.max).reduce((a, b) => if (GavroColStat.lt(tpe, a, b)) b else a))
       }
       val blockStats: Seq[Seq[(String, GavroColStat)]] =
         if (bin.forall(b => b._2.blockStats.length == b._2.blocks.length))
@@ -3672,9 +3561,9 @@ object Gavro {
   /** Publish a fully-written temp file under the next sequential part
     * index: put-if-absent on the name, retrying past concurrent landings
     * (staged bytes live on the data plane; the publish itself is
-    * coordination). Shared by [[mergeBin]] and [[rewriteTable]]'s staging
-    * pass. Returns the landed name. */
-  private def landNextPart(d: java.io.File, tmp: java.io.File): String = {
+    * coordination). Shared by [[mergeBin]], [[rewriteTable]]'s staging
+    * pass and the DSv2 sink's batch commit. Returns the landed name. */
+  private[sources] def landNextPart(d: java.io.File, tmp: java.io.File): String = {
     var landed: Option[String] = None
     while (landed.isEmpty) {
       val idx = dataStore.list(d)
@@ -4122,15 +4011,6 @@ object Gavro {
     try s.readAllBytes() finally { s.close(); inf.end() }
   }
 
-  /** Write one `.gavro` file per partition of a binary-column frame into
-    * `dir` — the archiver side of the landing zone. Column 0 is the record
-    * body; any `statCols` are the already-decoded field values riding
-    * alongside, folded into the footer's per-file min/max (the archiver
-    * KNOWS the values it just encoded — stats cost nothing extra). Every
-    * `blockBytes` of body, the current offset is recorded as a
-    * record-aligned block start, so the scan can split the file. Local FS
-    * here; the Hadoop FS API is a drop-in at scale (one stream per task,
-    * no driver involvement). */
   /** Route `df` so partition i holds EXACTLY the rows with
     * `floorMod(key, k) == i` — for dense integer keys (0..k-1) that is
     * one key value per partition, which the writer turns into provably
@@ -4206,6 +4086,15 @@ object Gavro {
     df.sparkSession.createDataFrame(rdd, df.schema)
   }
 
+  /** Write one `.gavro` file per partition of a binary-column frame into
+    * `dir` — the archiver side of the landing zone. Column 0 is the record
+    * body; any `statCols` are the already-decoded field values riding
+    * alongside, folded into the footer's per-file min/max (the archiver
+    * KNOWS the values it just encoded — stats cost nothing extra). Every
+    * `blockBytes` of body, the current offset is recorded as a
+    * record-aligned block start, so the scan can split the file. Local FS
+    * here; the Hadoop FS API is a drop-in at scale (one stream per task,
+    * no driver involvement). */
   def write(bins: DataFrame, dir: String,
       blockBytes: Long = DefaultBlockBytes,
       statCols: Seq[String] = Seq.empty,
@@ -4213,17 +4102,13 @@ object Gavro {
       bloomCols: Seq[String] = Seq.empty): Unit = {
     val d = new java.io.File(dir)
     d.mkdirs()
-    dataStore.list(d).filter(_.getName.endsWith(".gavro"))
-      .foreach(dataStore.delete)
-    store.list(new java.io.File(d, CommitsDir)).foreach(store.delete)
-    val codec = codecByte(blockCodec)
-    val statTypes = statTypesOf(bins, statCols)
-    val bloomTypes = bloomTypesOf(bins, bloomCols)
-    bins.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+    clearTable(d)
+    val layout = binsLayout(bins, blockBytes, statCols, blockCodec, bloomCols)
+    bins.queryExecution.toRdd.foreachPartition { it =>
       if (it.hasNext) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        writeRowsFile(it, new java.io.File(dir, f"part-$pid%05d.gavro"),
-          blockBytes, statTypes, codec, bloomTypes)
+        GavroFileWriter.writeBins(it,
+          new java.io.File(dir, f"part-$pid%05d.gavro"), layout)
       }
     }
     // Driver-side visibility point after every task finished: one commit
@@ -4233,138 +4118,24 @@ object Gavro {
     commitBatch(dir, written.toSeq)
   }
 
-  /** Resolve the DSv2 sink's bloom columns against the record schema:
-    * (field ordinal, footer stat type code) per name. Unknown names and
-    * double fields error at the driver — float equality is not a probe
-    * shape worth footer bytes, and a typo'd column must not silently
-    * write bloom-less files. */
-  private[sources] def bloomFieldsOf(record: AvroCodec.ARecord,
-      cols: Seq[String]): Array[(Int, Byte)] = cols.map { c =>
-    val i = record.fields.indexWhere(_.name == c)
-    require(i >= 0, s"gavro bloom column $c: no such field in the schema")
-    val tpe = AvroCodec.unwrapNull(record.fields(i).tpe) match {
-      case AvroCodec.ALong => 0: Byte
-      case AvroCodec.AString => 2: Byte
-      case AvroCodec.ABoolean => 3: Byte
-      case AvroCodec.AInt => 4: Byte
-      case other => throw new IllegalArgumentException(
-        s"gavro bloom column $c: unsupported type $other")
-    }
-    (i, tpe)
-  }.toArray
-
-  /** Bloom columns: point-probe skipping for value-UNCLUSTERED columns
-    * (md5 keys, hashed ids) where min/max stats are blind; doubles are
-    * rejected — float equality is not a probe shape worth footer bytes.
-    * Shared by [[write]] and the rewrite staging pass. */
-  private def bloomTypesOf(bins: DataFrame,
-      bloomCols: Seq[String]): Seq[(String, Byte)] = {
-    val bloomTypes = statTypesOf(bins, bloomCols)
-    bloomTypes.find(_._2 == 1).foreach(c => throw new IllegalArgumentException(
-      s"gavro bloom column ${c._1}: double columns carry no bloom"))
-    bloomTypes
+  /** Truncate a table: every data file and every commit record go (a
+    * truncate invalidates every prior commit record too). Shared by
+    * [[write]] and the DSv2 sink's overwrite commit. */
+  private[sources] def clearTable(d: java.io.File): Unit = {
+    dataStore.list(d).filter(_.getName.endsWith(".gavro"))
+      .foreach(dataStore.delete)
+    store.list(new java.io.File(d, CommitsDir)).foreach(store.delete)
   }
 
-  /** Resolve stat column types at the driver; the byte codes ship to
-    * tasks. */
-  private def statTypesOf(bins: DataFrame,
-      statCols: Seq[String]): Seq[(String, Byte)] = statCols.map { c =>
-    c -> (bins.schema(c).dataType match {
-      case org.apache.spark.sql.types.LongType => 0: Byte
-      case DoubleType => 1: Byte
-      case org.apache.spark.sql.types.StringType => 2: Byte
-      case org.apache.spark.sql.types.BooleanType => 3: Byte
-      case org.apache.spark.sql.types.IntegerType => 4: Byte
-      case other => throw new IllegalArgumentException(
-        s"gavro stat column $c: unsupported type $other")
-    })
-  }
-
-  /** The task-side body shared by [[write]] and [[rewriteTable]]'s
-    * staging pass: drain one partition's binary rows into one
-    * footer-indexed `.gavro` file (blocks, per-block + per-file stats,
-    * codec). */
-  private[sources] def writeRowsFile(it: Iterator[org.apache.spark.sql.Row],
-      f: java.io.File, blockBytes: Long,
-      statTypes: Seq[(String, Byte)], codec: Byte,
-      bloomTypes: Seq[(String, Byte)] = Seq.empty): Unit = {
-    val out = Gavro.dataStore.create(f)
-    val blocks = scala.collection.mutable.ArrayBuffer(0L)
-    val blockStats =
-      scala.collection.mutable.ArrayBuffer.empty[Seq[(String, GavroColStat)]]
-    val blockBlooms =
-      scala.collection.mutable.ArrayBuffer.empty[Seq[(String, GavroBloom)]]
-    var fileOffset = 0L
-    var blockBuf = new java.io.ByteArrayOutputStream(
-      math.min(blockBytes, 4L << 20).toInt)
-    val fileAcc = new GavroStatAcc(statTypes)
-    var blockAcc = new GavroStatAcc(statTypes)
-    def newBlooms() = bloomTypes.map(t => t._1 -> new GavroBloom.Builder(t._2))
-    var bloomAcc = newBlooms()
-    def absorbBlooms(r: org.apache.spark.sql.Row): Unit =
-      bloomAcc.foreach { case (name, b) =>
-        val v = r.getAs[Any](name)
-        if (v != null) b.add(v)
-      }
-    def flushBlock(): Unit = if (blockBuf.size() > 0) {
-      val payload = compress(codec, blockBuf.toByteArray)
-      out.write(payload)
-      fileOffset += payload.length
-      blockBuf = new java.io.ByteArrayOutputStream(
-        math.min(blockBytes, 4L << 20).toInt)
-    }
-    try {
-      it.foreach { r =>
-        if (blockBuf.size() >= blockBytes) {
-          flushBlock()
-          blocks += fileOffset
-          blockStats += blockAcc.result(); blockAcc = new GavroStatAcc(statTypes)
-          blockBlooms += bloomAcc.map(e => e._1 -> e._2.result())
-          bloomAcc = newBlooms()
-        }
-        val b = r.getAs[Array[Byte]](0)
-        blockBuf.write(Array[Byte]((b.length >>> 24).toByte, (b.length >>> 16).toByte,
-          (b.length >>> 8).toByte, b.length.toByte))
-        blockBuf.write(b)
-        fileAcc.absorb(r); blockAcc.absorb(r); absorbBlooms(r)
-      }
-      flushBlock()
-      blockStats += blockAcc.result()
-      blockBlooms += bloomAcc.map(e => e._1 -> e._2.result())
-      GavroFooter.write(out, blocks.toSeq, fileAcc.result(),
-        if (statTypes.nonEmpty) blockStats.toSeq else Seq.empty, codec,
-        if (bloomTypes.nonEmpty) blockBlooms.toSeq else Seq.empty)
-    } finally out.close()
-  }
-
-  /** Running min/max over the writer's stat columns (nulls skipped). */
-  private class GavroStatAcc(statTypes: Seq[(String, Byte)]) extends Serializable {
-    private val mins = new Array[Any](statTypes.length)
-    private val maxs = new Array[Any](statTypes.length)
-    private def lt(t: Byte, a: Any, b: Any): Boolean = t match {
-      case 0 => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-      case 1 => Gavro.sparkDoubleLt(
-        a.asInstanceOf[Double], b.asInstanceOf[Double])
-      case 2 => a.asInstanceOf[String] < b.asInstanceOf[String]
-      case 3 => !a.asInstanceOf[Boolean] && b.asInstanceOf[Boolean]
-      case 4 => a.asInstanceOf[Int] < b.asInstanceOf[Int]
-    }
-    def absorb(r: org.apache.spark.sql.Row): Unit = {
-      var i = 0
-      while (i < statTypes.length) {
-        val v = r.getAs[Any](statTypes(i)._1)
-        if (v != null) {
-          if (mins(i) == null || lt(statTypes(i)._2, v, mins(i))) mins(i) = v
-          if (maxs(i) == null || lt(statTypes(i)._2, maxs(i), v)) maxs(i) = v
-        }
-        i += 1
-      }
-    }
-    def result(): Seq[(String, GavroColStat)] =
-      statTypes.indices.filter(i => mins(i) != null).map { i =>
-        statTypes(i)._1 -> GavroColStat(statTypes(i)._2, mins(i), maxs(i))
-      }
-  }
+  /** [[write]]'s and the rewrite staging pass's file layout over a `bin`
+    * frame, resolved at the driver: the named stat and bloom columns by
+    * ordinal in `bins`. */
+  private def binsLayout(bins: DataFrame, blockBytes: Long,
+      statCols: Seq[String], blockCodec: String,
+      bloomCols: Seq[String]): GavroFileWriter.Layout =
+    GavroFileWriter.Layout(blockBytes, codecByte(blockCodec),
+      GavroFileWriter.statColumns(bins.schema, statCols),
+      GavroFileWriter.bloomColumns(bins.schema, bloomCols))
 
   /** Archive the request_log synthesis to `.gavro` files, then read them
     * back through the connector and aggregate TWO of the record's eleven

@@ -598,10 +598,30 @@ class GavroSourceSpec extends SparkSpec {
     assert(!ex("/api/o"))           // overlaps max
     assert(!ex("/api"))             // prefix of everything
     assert(!ex(""))                 // empty prefix matches all
-    // all-U+FFFF prefix has no finite upper bound: only max < p can skip
+    // a U+FFFF prefix bounds at U+10000, a surrogate pair that sorts
+    // after every BMP unit in code-point order
     assert(ex("￿￿"))
     assert(!GavroSkip.exclude(Map("k" -> GavroColStat(2, "￿", "￿")),
       Seq(GavroPred("k", "starts", "￿"))))
+    def exAt(mn: String, mx: String, pre: String) = GavroSkip.exclude(
+      Map("k" -> GavroColStat(2, mn, mx)), Seq(GavroPred("k", "starts", pre)))
+    // U+D7FF's successor is U+E000, not a lone surrogate: matches stay,
+    // the first value past the prefix range is skipped
+    assert(!exAt("\uD7FF\uD83D\uDE00", "\uD7FFz", "\uD7FF"))
+    assert(exAt("\uE000", "\uE001", "\uD7FF"))
+    // supplementary prefix U+1F600: bound U+1F601, BMP values sort below
+    val grin = "\uD83D\uDE00"
+    assert(!exAt(grin + "a", grin + "z", grin))
+    assert(exAt("\uD83D\uDE01", "\uD83D\uDE01", grin))
+    assert(exAt("\uFFFD", "\uFFFF", grin))
+    assert(!exAt("\uFFFD", grin, grin))
+    // trailing U+10FFFF is dropped before the increment; an all-U+10FFFF
+    // prefix has no finite bound, so only max < p can skip
+    val top = "\uDBFF\uDFFF"
+    assert(exAt("b", "c", "a" + top))
+    assert(!exAt("a" + top + "x", "b", "a" + top))
+    assert(!exAt(top, top + "x", top))
+    assert(exAt("a", "\uFFFF", top))
     // ends/contains never skip, whatever the stats say
     assert(!GavroSkip.exclude(st, Seq(GavroPred("k", "ends", "zzz"))))
     assert(!GavroSkip.exclude(st, Seq(GavroPred("k", "contains", "zzz"))))
@@ -2560,5 +2580,82 @@ class GavroSourceSpec extends SparkSpec {
     assert(cO == ref.filter(col("session_id").isin(overKeys: _*)).count())
     assert(rO == total,
       s"over-bound IN read $rO of $total — expected a declined proof")
+  }
+
+  test("string stats order by code point, as Spark does, at file, block and optimize level") {
+    val schema = AvroCodec.sqlType(AvroCodec.schemaByName("request_log"))
+    def rows(endpoints: Seq[String]) = spark.createDataFrame(
+      java.util.Arrays.asList(endpoints.zipWithIndex.map { case (e, i) =>
+        org.apache.spark.sql.Row(i.toLong, e, "GET", 200, 1, 7L, "s", "r1",
+          "u", "web", new java.sql.Timestamp(0L))
+      }: _*), schema).coalesce(1)
+    // one record per block
+    def append(out: String, endpoints: String*): Unit =
+      rows(endpoints).write.format("gavro").option("schema", "request_log")
+        .option("blockBytes", "1").mode("append").save(out)
+    // U+1F600 sorts above U+FFFD in Spark's order, yet its first UTF-16
+    // unit (U+D83D) sorts below: a code-unit stat order skips live data
+    val grin = "\uD83D\uDE00"
+    val repl = "\uFFFD"
+    def probe(out: String, all: Seq[String], tag: String): Unit =
+      Seq(col("endpoint") > repl, col("endpoint") < grin).foreach { p =>
+        val got = spark.read.format("gavro").option("schema", "request_log")
+          .load(out).filter(p).count()
+        val want = rows(all).filter(p).count()
+        assert(want > 0 && got == want, s"$tag $p: gavro $got, Spark $want")
+      }
+    // file level: two one-record files
+    val files = tmpDir("cporder_files")
+    append(files, grin)
+    append(files, repl)
+    probe(files, Seq(grin, repl), "file")
+    // block level: one file whose file stats admit both probes
+    val blocks = tmpDir("cporder_blocks")
+    val values = Seq("a", repl, grin, "\uFFFF")
+    append(blocks, values: _*)
+    val only = Gavro.listDataFiles(blocks)
+    assert(only.length == 1 &&
+      graft.sources.GavroFooter.read(only.head).blocks.length == values.length)
+    probe(blocks, values, "block")
+    // optimize folds the two one-record files' stats into one footer
+    assert(Gavro.optimize(files).length == 1)
+    assert(Gavro.listDataFiles(files).length == 1)
+    probe(files, Seq(grin, repl), "optimized")
+  }
+
+  test("the DSv2 sink and Gavro.write write byte-identical files") {
+    val schema = AvroCodec.sqlType(AvroCodec.schemaByName("request_log"))
+    val recs = Tables.events(spark, dir)
+      .select(AvroCodec.requestLogRec.as("rec")).select(col("rec.*")).collect()
+    val rows = spark.createDataFrame(java.util.Arrays.asList(recs: _*), schema)
+      .coalesce(1)
+    // every scalar record field, in record order: the sink's stat set
+    val statCols = Seq("id", "endpoint", "method", "status_code", "latency_ms",
+      "user_id", "session_id", "region_name", "user_display_name", "platform")
+    val quoted = rows.columns.map(c => s"`$c`").mkString(", ")
+    val bins = rows.select(
+      expr(s"to_avro_graft(struct($quoted), 'request_log')").as("bin") +:
+        statCols.map(col): _*)
+    def onlyDataFile(d: String): java.io.File = {
+      val fs = new java.io.File(d).listFiles().filter(_.getName.endsWith(".gavro"))
+      assert(fs.length == 1, fs.map(_.getName).mkString(", "))
+      fs.head
+    }
+    Seq("none", "deflate").foreach { codec =>
+      val viaSink = tmpDir(s"sink_$codec")
+      rows.write.format("gavro").option("schema", "request_log")
+        .option("blockBytes", "2048").option("blockCodec", codec)
+        .option("bloomCols", "session_id").mode("append").save(viaSink)
+      val viaWrite = tmpDir(s"write_$codec")
+      Gavro.write(bins, viaWrite, blockBytes = 2048L, statCols = statCols,
+        blockCodec = codec, bloomCols = Seq("session_id"))
+      val (a, b) = (onlyDataFile(viaSink), onlyDataFile(viaWrite))
+      val meta = graft.sources.GavroFooter.read(a)
+      assert(meta.blocks.length > 1, "blocks must roll")
+      assert(meta.blockBlooms.nonEmpty && meta.stats.size == statCols.length)
+      assert(java.util.Arrays.equals(
+        java.nio.file.Files.readAllBytes(a.toPath),
+        java.nio.file.Files.readAllBytes(b.toPath)), s"$codec: files differ")
+    }
   }
 }
