@@ -19,6 +19,15 @@ import org.apache.spark.sql.SparkSession
   *   - `nanosAsLong`: the driver fixtures store TIMESTAMP(NANOS), which the
   *     Spark 4 parquet reader otherwise rejects; `Tables.events` converts.
   *   - `GraftExtensions` registers the native `vec_dot` expression.
+  *   - `parallelPartitionDiscovery.threshold` is `Int.MaxValue`: file
+  *     listing always runs on the driver. Above the default of 32 paths
+  *     Spark lists in a job with one task per path, and every task
+  *     deserializes the whole Hadoop configuration to stat one file.
+  *     A stream micro-batch admitting `Jobs.MaxFilesPerTrigger` = 64
+  *     files paid that in every query's batch, although the source
+  *     already holds each file's status. The master is always
+  *     `local[cores]`, so the listing job ran on this JVM anyway; on a
+  *     cluster whose sources list thousands of directories, lower it.
   */
 object Session {
 
@@ -53,6 +62,8 @@ object Session {
       // dedup_fuzzy_title 1.78×, ann_ivfpq_topk 1.63×) and even the
       // tail-tax queries not recovering (rare_bigram_score 1.44×).
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       .config("spark.ui.enabled", "false")
 
   def local(appName: String): SparkSession = {

@@ -29,18 +29,21 @@ object Jobs {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** File-based stream source for local/dev runs (S11 streaming form):
-    * parquet drop-dir with the explicit schema. Kafka deployments use
-    * [[KafkaStack.cdcStream]] instead. */
   /** Backpressure rides Spark's own file-source admission control: a
     * restart against a weekend's backlog must drain in bounded batches,
     * not one giant first micro-batch that blows the trigger SLA (SURVEY
     * §4's `maxOffsetsPerTrigger` story; the reference saturates on its
     * first batch, FLOW.md:107,413). 64 files ≈ a few minutes of 10 s
     * epochs — deep enough to amortize scheduling, bounded enough to keep
-    * first-batch memory flat. */
+    * first-batch memory flat. A 64-file admission is cheap only because
+    * [[graft.Session]] lists files on the driver: above 32 paths Spark
+    * would otherwise launch a listing job with one task per file, in
+    * every query's batch. */
   val MaxFilesPerTrigger = 64
 
+  /** File-based stream source for local/dev runs (S11 streaming form):
+    * parquet drop-dir with the explicit schema. Kafka deployments use
+    * [[KafkaStack.cdcStream]] instead. */
   def fileEventStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", MaxFilesPerTrigger)

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.HiveCatalogMetrics
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.{InMemoryKvStore, Jobs, Keys}
@@ -117,5 +120,29 @@ class JobsSpec extends SparkSpec {
       val platform = kv.strings("nexus:platform:breakdown")
       assert(platform.contains("\"name\"") && platform.contains("\"value\""))
     } finally queries.foreach(q => if (q.isActive) q.stop())
+  }
+
+  test("a micro-batch of more than 32 files lists them on the driver, not in a listing job") {
+    val in = Files.createTempDirectory("graft-stream-many").toString + "/in"
+    val n = 40
+    assert(n > 32 && n <= Jobs.MaxFilesPerTrigger)
+    val rows = (0 until n).map(i => Row(i.toLong,
+      Timestamp.valueOf("2024-01-01 00:00:00"), i.toLong, "view", 1.0, "{}"))
+    // one slice per row: one one-row parquet file per write task
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, n), Jobs.eventsSchema)
+      .write.parquet(in)
+    assert(new java.io.File(in).list().count(_.endsWith(".parquet")) == n)
+    val ckpt = Files.createTempDirectory("graft-ckpt-many").toString
+    val seen = new AtomicLong
+    val listingJobs = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+    val query = Jobs.fileEventStream(spark, in).writeStream
+      .foreachBatch { (df: DataFrame, _: Long) => seen.addAndGet(df.count()); () }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try query.awaitTermination(60000) finally if (query.isActive) query.stop()
+    assert(seen.get == n)
+    // incremented on the driver when a listing job is launched
+    assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount - listingJobs == 0)
   }
 }

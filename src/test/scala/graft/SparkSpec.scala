@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for specs (small parallelism, UTC, nanos
-  * handling — mirrors the Verify/Bench session configuration). */
+/** Shared local SparkSession for specs: the engine's own
+  * [[graft.Session.builder]] at two cores, so specs run with the settings
+  * every main runs with. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,16 +16,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.builder("graft-tests", 2).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
