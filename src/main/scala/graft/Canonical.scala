@@ -1,7 +1,7 @@
 package graft
 
 /** THE canonicality rule, in one place for every measurement harness
-  * (Bench, StreamBench, ScaleSmoke): a run's numbers are citable
+  * (Bench, ScaleSmoke): a run's numbers are citable
   * round-over-round only when the host was idle when its clock started —
   * 1-minute AND 5-minute loadavg below the gate
   * (`SPARK_GRAFT_CANONICAL_LOAD`, default 2.0). Unmeasurable load (no
@@ -9,8 +9,8 @@ package graft
   * of contention, and stamping false would permanently disable the
   * regression gates on such hosts. The rule is load-bearing — it decides
   * which artifacts PROGRESS may cite and which runs bench_compare may
-  * call regressions — so the three harnesses must share one
-  * implementation, not three copies that can drift.
+  * call regressions — so the harnesses must share one
+  * implementation, not copies that can drift.
   */
 object Canonical {
 

@@ -76,9 +76,10 @@ object Observability {
     * (file-scan paths), how many rows came out, how long it ran, and
     * whether it failed — the access/lineage log a data-governance review
     * asks for first. Driver-side only: the listener walks the executed
-    * plan for `FileSourceScanExec` nodes and reads their metrics; it never
-    * touches rows. At scale this is the hook an audit pipe (e.g. a lineage
-    * service) attaches to.
+    * plan for file scans (their root paths) and DSv2 scans (their table
+    * name; a gavro table's name carries its path) and reads the plan's
+    * metrics; it never touches rows. At scale this is the hook an audit
+    * pipe (e.g. a lineage service) attaches to.
     */
   final case class BatchAudit(
       action: String,
@@ -93,21 +94,23 @@ object Observability {
     // AQE wraps the live plan in AdaptiveSparkPlanExec / QueryStageExec
     // nodes whose subtrees are NOT `children`; a plain collect misses every
     // scan. Walk through them explicitly.
-    private def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+    private def inputsOf(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[String] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scansOf(a.executedPlan)
+        inputsOf(a.executedPlan)
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scansOf(q.plan)
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(scansOf)
+        inputsOf(q.plan)
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toString)
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        Seq(b.table.name())
+      case other => other.children.flatMap(inputsOf)
     }
 
     private def record(funcName: String,
         qe: org.apache.spark.sql.execution.QueryExecution,
         durationNs: Long, failed: Boolean): Unit = {
-      val scans = scansOf(qe.executedPlan)
-        .flatMap(_.relation.location.rootPaths.map(_.toString)).distinct
+      val scans = inputsOf(qe.executedPlan).distinct
       val rows = qe.executedPlan.metrics.get("numOutputRows")
         .map(_.value).getOrElse(-1L)
       audits.add(BatchAudit(funcName, scans, rows, durationNs / 1000000L, failed))

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.concurrent.TrieMap
 
-/** In-JVM RESP2 server stub for [[RespKvStore]] tests (and the StreamBench freshness mode) —
+/** In-JVM RESP2 server stub for [[RespKvStore]] tests (and perfbench's stream workload) —
   * the same role RegistrySpec's local HTTP server plays for the schema
   * registry: a protocol-accurate counterpart (real sockets, real RESP
   * framing) implementing exactly the command surface the engine's sink

@@ -94,44 +94,32 @@ class CheckpointSpec extends SparkSpec {
 
   test("mapGroupsWithState state survives a checkpointed restart") {
     import spark.implicits._
-    import graft.streaming.CdcMaterializer
-    import graft.streaming.CdcMaterializer.CdcOp
-    val in = Files.createTempDirectory("graft-cdc-in").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
+    val in = Files.createTempDirectory("graft-alerts-in").toString
+    val ckpt = Files.createTempDirectory("graft-alerts-ckpt").toString
 
-    def writeOps(ops: Seq[CdcOp]): Unit =
-      ops.toDF().coalesce(1).write.mode("append").parquet(in)
-    def run(): Seq[org.apache.spark.sql.Row] = {
-      // foreachBatch, not the memory sink: memory-sink queries refuse to
-      // recover from a checkpoint.
-      val got = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      val src = spark.readStream
-        .schema(Seq.empty[CdcOp].toDF().schema).parquet(in).as[CdcOp]
-      val q = CdcMaterializer(src).toDF()
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          got.synchronized { got ++= batch.collect() }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode(CdcMaterializer.outputMode)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    def writeKpis(rows: Seq[(Double, Long, Long)], mode: String): Unit =
+      rows.toDF("errorRate", "latency", "updatedAt")
+        .coalesce(1).write.mode(mode).parquet(in)
+    def run(): String = {
+      val kv = new InMemoryKvStore
+      val q = Jobs.alertsJob(() => Jobs.fileKpiStream(spark, in), kv, ckpt,
+        Trigger.AvailableNow())
       q.awaitTermination(60000)
       if (q.isActive) q.stop()
-      got.toSeq
+      kv.strings(Keys.AlertRules)
     }
 
-    writeOps(Seq(CdcOp(1L, 100L, 1L, "c", 10.0, deleted = false)))
-    run()
-    // Restart from the checkpoint; a STALE op for key 1 arrives. If the
-    // per-key state had not been restored, last-writer-wins would wrongly
-    // emit the stale value as current.
-    writeOps(Seq(CdcOp(1L, 50L, 0L, "u", 99.0, deleted = false)))
-    val out2 = run()
-    assert(out2.length == 1)
-    val r = out2.head
-    assert(r.getAs[Long]("eventId") == 1L && r.getAs[Double]("value") == 10.0,
-      s"state lost across restart: $r")
+    // latency 500 >= 200 breaches alert_1 twice: pending, not yet firing
+    writeKpis(Seq((0.0, 500L, 1000L), (0.0, 500L, 2000L)), "append")
+    assert(run().contains("\"id\":\"alert_1\",\"status\":\"pending\",\"consecutive\":2"))
+    // Restart from the checkpoint with one more breach. The overwrite
+    // drops run 1's file, as source retention would, so the run of two
+    // can only come back from the checkpointed state: the third
+    // consecutive breach fires only if it was restored, and lost state
+    // would read pending with a run of one.
+    writeKpis(Seq((0.0, 500L, 3000L)), "overwrite")
+    val rules = run()
+    assert(rules.contains("\"id\":\"alert_1\",\"status\":\"firing\",\"consecutive\":3"),
+      s"alert state lost across restart: $rules")
   }
 }

@@ -62,7 +62,8 @@ class JobsSpec extends SparkSpec {
     val kv = new InMemoryKvStore
     val input = MemoryStream[(Double, Long, Long)]
     val query = Jobs.alertsJob(
-      () => input.toDF().toDF("errorRate", "latency", "updatedAt"), kv, ckpt)
+      () => input.toDF().toDF("errorRate", "latency", "updatedAt"), kv, ckpt,
+      Trigger.ProcessingTime("100 milliseconds"))
     try {
       // latency 500 >= 200 breaches alert_1; errorRate 0.0 keeps alert_2 ok
       input.addData((0.0, 500L, 1000L)); query.processAllAvailable()

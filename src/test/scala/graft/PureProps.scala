@@ -50,50 +50,6 @@ object PureProps extends Properties("graft.pure") {
       KvSink.computeTrend(v, Some(v)) == 0.0
     }
 
-  import graft.streaming.CdcMaterializer
-  import graft.streaming.CdcMaterializer.CdcOp
-
-  // Payload derives from (ts, id): two generated ops with the same identity
-  // are byte-identical, as in a real log (an offset can't carry two values) —
-  // required for order-insensitivity to be well-defined under generated ties.
-  private val ops: Gen[List[CdcOp]] = Gen.listOf(for {
-    ts <- Gen.chooseNum(0L, 5L) // tight range so ties/ordering collisions occur
-    id <- Gen.chooseNum(0L, 20L)
-  } yield CdcOp(1L, ts, id, if (id % 3 == 0) "d" else "u",
-    ts * 100.0 + id, deleted = id % 3 == 0))
-
-  property("cdc fold is order-insensitive: any arrival order, same final state") =
-    forAll(ops) { list =>
-      list.nonEmpty ==> {
-        def fold(l: List[CdcOp]) =
-          l.foldLeft(Option.empty[CdcMaterializer.RowState])(
-            (s, o) => Some(CdcMaterializer.step(s, o)))
-        val sorted = fold(list.sortBy(o => (o.tsMs, o.eventId)))
-        Prop(fold(list.reverse) == sorted && fold(list) == sorted)
-          .label(s"n=${list.length}")
-      }
-    }
-
-  property("cdc fold is idempotent under replay") =
-    forAll(ops) { list =>
-      list.nonEmpty ==> {
-        def fold(l: List[CdcOp]) =
-          l.foldLeft(Option.empty[CdcMaterializer.RowState])(
-            (s, o) => Some(CdcMaterializer.step(s, o)))
-        fold(list ++ list) == fold(list)
-      }
-    }
-
-  property("cdc winner is the max (ts, eventId) op") =
-    forAll(ops) { list =>
-      list.nonEmpty ==> {
-        val winner = list.maxBy(o => (o.tsMs, o.eventId))
-        val folded = list.foldLeft(Option.empty[CdcMaterializer.RowState])(
-          (s, o) => Some(CdcMaterializer.step(s, o))).get
-        (folded.tsMs, folded.eventId) == ((winner.tsMs, winner.eventId))
-      }
-    }
-
   // ---- bottom-k sketch merge algebra (graft.functions.Sketches) ----
 
   import graft.functions.{Sketch, Sketches}

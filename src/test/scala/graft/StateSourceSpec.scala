@@ -45,89 +45,4 @@ class StateSourceSpec extends SparkSpec {
     // believed BEFORE the second batch — c absent, b at one event.
     assert(stateAt(Some(0L)) == Map("a" -> (2L, 3L), "b" -> (1L, 10L)))
   }
-
-  test("statestore read surfaces a transformWithState MapState variable") {
-    import graft.streaming.Leaderboard
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // transformWithState keeps each state variable in its own column
-    // family — RocksDB-provider-only, for the WRITER and the offline
-    // READER alike.
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-state-tws").toString
-    val in = MemoryStream[Leaderboard.Score]
-    val q = Leaderboard(in.toDS(), k = 2).toDF().writeStream
-      .format("noop").outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .start()
-    in.addData(Leaderboard.Score("g1", "alice", 3.0),
-      Leaderboard.Score("g1", "bob", 1.0),
-      Leaderboard.Score("g2", "carol", 7.0))
-    q.processAllAvailable()
-    in.addData(Leaderboard.Score("g1", "bob", 4.0))
-    q.processAllAvailable()
-    q.stop()
-    // Custom state variables are addressed BY NAME — the offline reader
-    // sees the processor's MapState exactly as the processor declared it:
-    // composite (grouping key, user key) → running total.
-    val totals = spark.read.format("statestore")
-      .option("path", ckpt)
-      .option("stateVarName", "totals")
-      .load()
-      .select(col("key.value").as("grp"), col("user_map_key.value").as("member"),
-        col("user_map_value.value").as("total"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    assert(totals == Map(
-      ("g1", "alice") -> 3.0, ("g1", "bob") -> 5.0, ("g2", "carol") -> 7.0),
-      totals.toString)
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("statestore read surfaces the stream dedup's remembered signatures") {
-    import graft.streaming.StreamDedup
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-state-dedup").toString
-      val in = MemoryStream[(Long, String)]
-      val text = "the quick brown fox jumps over the lazy dog by the river"
-      val other = "completely different prose about catalyst rules and shuffles"
-      val q = StreamDedup.nearDupHits(in.toDF().toDF("doc_id", "text"))
-        .toDF().writeStream.format("noop").outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-      in.addData((1L, text), (2L, text), (3L, other))
-      q.processAllAvailable()
-      q.stop()
-      // The offline reader sees the per-bucket ListState exactly as the
-      // processor holds it: doc 1 and doc 3 each remembered in their 6
-      // band buckets; the duplicate doc 2 matched and was never stored.
-      val rows = spark.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "seen")
-        .load()
-        .select(col("list_element.doc_id").as("doc_id"),
-          col("list_element.sig").as("sig"))
-        .collect()
-      assert(rows.length == 2 * StreamDedup.Bands, rows.length.toString)
-      assert(rows.map(_.getLong(0)).toSet == Set(1L, 3L))
-      assert(rows.forall(_.getSeq[Long](1).length == StreamDedup.Signatures))
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
 }
