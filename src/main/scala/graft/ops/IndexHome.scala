@@ -87,11 +87,11 @@ private[graft] object IndexHome {
     if (commits.isDirectory) {
       // ONLY the durable log entries (.commit/.checkpoint) participate:
       // transient maintenance objects (_optimize.lock, .retire sidecars)
-      // and deletable .absorbed manifests would make the key FLAP while
-      // maintenance runs on the source table — a spurious re-key and a
-      // duplicate full build for unchanged content. (An optimize still
-      // re-keys: it rewrites the checkpoint set. Conservative — content
-      // is unchanged but the snapshot's durable identity is not.)
+      // would make the key FLAP while maintenance runs on the source
+      // table — a spurious re-key and a duplicate full build for
+      // unchanged content. (An optimize still re-keys: it rewrites the
+      // checkpoint set. Conservative — content is unchanged but the
+      // snapshot's durable identity is not.)
       store.list(commits)
         .filter(f => f.getName.endsWith(".commit") ||
           f.getName.endsWith(".checkpoint"))

@@ -66,6 +66,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * range reads swap for the Hadoop FileSystem API with the same
   * block-grain planning, and everything above the byte source is
   * unchanged.
+  *
+  * Batch only: the table declares BATCH_READ, BATCH_WRITE and TRUNCATE, so
+  * `readStream`/`writeStream.format("gavro")` fail at start in Spark's own
+  * capability check. The streaming jobs read a parquet drop-dir
+  * ([[graft.streaming.Jobs]]); `sinceCommit` is the archive's incremental
+  * read.
   */
 class GavroSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "gavro"
@@ -106,15 +112,10 @@ class GavroTable(tableSchema: StructType, path: String, schemaName: String,
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE)
+      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GavroScanBuilder(tableSchema, path, schemaName, readerJson, asOfCommit,
-      sinceCommit,
-      maxFilesPerTrigger = Option(options.get("maxFilesPerTrigger")).map(_.toInt),
-      maxBytesPerTrigger = Option(options.get("maxBytesPerTrigger")).map(_.toLong),
-      partitionKey = Option(options.get("partitionKey")))
+      sinceCommit, partitionKey = Option(options.get("partitionKey")))
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -133,8 +134,6 @@ class GavroTable(tableSchema: StructType, path: String, schemaName: String,
 class GavroScanBuilder(full: StructType, path: String, schemaName: String,
     readerJson: Option[String] = None, asOfCommit: Option[String] = None,
     sinceCommit: Option[String] = None,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None,
     partitionKey: Option[String] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit
@@ -284,8 +283,7 @@ class GavroScanBuilder(full: StructType, path: String, schemaName: String,
   override def build(): Scan =
     new GavroScan(path, schemaName,
       if (agg != null) agg.schema else required, pushed, limit,
-      Option(agg), readerJson, asOfCommit, sinceCommit,
-      maxFilesPerTrigger, maxBytesPerTrigger, partitionKey)
+      Option(agg), readerJson, asOfCommit, sinceCommit, partitionKey)
 }
 
 /** DSv2 WRITE path: `df.write.format("gavro").option("schema", …)
@@ -299,8 +297,7 @@ class GavroScanBuilder(full: StructType, path: String, schemaName: String,
   * task writes a hidden `.tmp` file and reports it in its commit message;
   * the driver PUBLISHES by renaming temp files to the next sequential
   * `part-NNNNN.gavro` names (continuing past the highest existing index,
-  * so appended batches sort AFTER prior files — the append-only listing
-  * order the streaming tail's offset depends on). A failed job leaves
+  * so appended batches sort AFTER prior files). A failed job leaves
   * only invisible temp files (scan listing matches `.gavro` suffix with a
   * `part-` prefix); abort deletes them. `mode("overwrite")` routes
   * through `SupportsTruncate`: existing data files are deleted at commit
@@ -326,68 +323,9 @@ class GavroWriteBuilder(path: String, schemaName: String, in: StructType,
   override def buildForBatch(): org.apache.spark.sql.connector.write.BatchWrite =
     new GavroBatchWrite(path, schemaName, overwrite, blockBytes, codec,
       bloomCols)
-
-  /** Streaming sink: the archiver itself as `writeStream.format("gavro")`.
-    * Files are published per epoch as `part-e<epoch>-<partition>.gavro` —
-    * epoch-monotonic names keep the append-only listing order the gavro
-    * streaming SOURCE tails, so stream → archive → tail composes; and the
-    * epoch-deterministic naming makes a replayed epoch IDEMPOTENT (the
-    * redo republishes the same names over the originals instead of
-    * duplicating data — exactly-once at the file level, the same
-    * discipline as Spark's own file sink without its manifest log). */
-  override def buildForStreaming()
-      : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-    new GavroStreamingWrite(path, schemaName, blockBytes, codec, bloomCols)
 }
 
-class GavroStreamingWrite(path: String, schemaName: String, blockBytes: Long,
-    codec: Byte = 0, bloomCols: Seq[String] = Seq.empty)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  override def createStreamingWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    GavroStreamingWriterFactory(path, schemaName, blockBytes, codec, bloomCols)
-
-  override def commit(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    val d = new java.io.File(path)
-    val published = messages.collect { case GavroEpochTempFile(tmp, pid) =>
-      val dst = new java.io.File(d, f"part-e$epochId%010d-$pid%05d.gavro")
-      if (dst.exists()) dst.delete() // epoch replay: republish, don't duplicate
-      if (!new java.io.File(tmp).renameTo(dst))
-        throw new java.io.IOException(s"gavro commit: cannot publish $tmp")
-      dst.getName
-    }
-    // epoch-idempotent, sequence-monotone record: a replayed epoch
-    // re-lands the SAME commit record over itself (found by its e<epoch>
-    // tag); a fresh epoch takes the next sequence number shared with the
-    // batch writer so time travel has one total order
-    Gavro.writeEpochCommit(path, epochId, published.toSeq)
-  }
-
-  override def abort(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    messages.collect { case GavroEpochTempFile(tmp, _) =>
-      new java.io.File(tmp).delete() }
-}
-
-case class GavroEpochTempFile(tmp: String, partitionId: Int)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-case class GavroStreamingWriterFactory(path: String, schemaName: String,
-    blockBytes: Long, codec: Byte = 0, bloomCols: Seq[String] = Seq.empty)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new GavroDataWriter(path, schemaName, partitionId, taskId, blockBytes,
-        codec, bloomCols) {
-      override def commitMessage(tmpPath: String)
-          : org.apache.spark.sql.connector.write.WriterCommitMessage =
-        GavroEpochTempFile(tmpPath, partitionId)
-    }
-}
-
-/** A writer that saw zero rows — both commit paths skip it. */
+/** A writer that saw zero rows — the commit skips it. */
 case object GavroNoFile
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
@@ -457,25 +395,19 @@ class GavroDataWriter(path: String, schemaName: String, partitionId: Int,
     file.append(AvroCodec.encode(record, i => row.get(i, types(i)), row.isNullAt),
       row)
 
-  /** Hook: the streaming factory wraps the temp path in an epoch-aware
-    * message; the batch path uses the plain one. */
-  protected def commitMessage(tmpPath: String)
-      : org.apache.spark.sql.connector.write.WriterCommitMessage =
-    GavroTempFile(tmpPath)
-
   override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
     // An EMPTY partition publishes nothing: a zero-record file carries no
     // stats, so it can neither prove a partition key nor be skipped by a
     // predicate — and an exact-routed append (one partition per layout
     // slot, most slots untouched by a small delta) would otherwise land
-    // dozens of empty files per trigger. Both commit paths ignore the
-    // no-file message.
+    // dozens of empty files per append. The commit ignores the no-file
+    // message.
     if (file.isEmpty) {
       file.abort()
       GavroNoFile
     } else {
       file.commit()
-      commitMessage(tmp.getAbsolutePath)
+      GavroTempFile(tmp.getAbsolutePath)
     }
   }
 
@@ -522,8 +454,6 @@ class GavroScan(path: String, schemaName: String, required: StructType,
     agg: Option[GavroAgg] = None, readerJson: Option[String] = None,
     asOfCommit: Option[String] = None,
     sinceCommit: Option[String] = None,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None,
     partitionKey: Option[String] = None)
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -712,405 +642,6 @@ class GavroScan(path: String, schemaName: String, required: StructType,
   override def reportDriverMetrics(): Array[CustomTaskMetric] = Array(
     GavroMetrics.Task("gavroBlocksRead", plannedBlocks),
     GavroMetrics.Task("gavroBlocksTotal", blocksTotalPlanned))
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    // Batch-only options must not be silently dropped: a stream's
-    // position is its checkpoint, and a snapshot pin makes no sense for
-    // an unbounded tail.
-    require(sinceCommit.isEmpty && asOfCommit.isEmpty,
-      "gavro: sinceCommit/asOfCommit are batch read options — a stream's " +
-        "position is tracked by its checkpoint")
-    new GavroMicroBatchStream(path, schemaName, required.fieldNames,
-      pushed.map(GavroPred.from), readerJson,
-      maxFilesPerTrigger, maxBytesPerTrigger)
-  }
-}
-
-/** Streaming offset = the NAME of the last consumed file (`last`, empty
-  * = none) plus the highest OPTIMIZE checkpoint whose merged outputs
-  * are fully consumed (`thru`, empty = none): a high-watermark over the
-  * monotonically named append-only listing, extended so compaction can
-  * run under the tail. Name-based (not count-based) so a rewrite of the
-  * listing underneath the stream is DETECTED — the watermark file
-  * vanishing from the committed listing is unambiguous evidence, where
-  * a count offset silently skips or stalls. A vanished watermark that
-  * an OPTIMIZE absorbed is TRANSLATED through the durable `.absorbed`
-  * manifests (see [[GavroMicroBatchStream.deliverables]]); `thru`
-  * records that a merge's content has been delivered even when no
-  * single listed NAME can prove it (a merged output taking a numeric
-  * index below a live epoch watermark), which is what keeps the
-  * translation exactly-once instead of looping on re-delivery. A
-  * watermark nothing covers (truncate, manual deletion) fails loudly.
-  * Bounded state — two names — where Spark's own file source keeps a
-  * per-file seen-map. */
-case class GavroStreamOffset(last: String, thru: String = "")
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = s"""{"last":"$last","thru":"$thru"}"""
-}
-
-/** Micro-batch stream over a gavro landing zone: each trigger's batch is
-  * the files that appeared since the last committed offset, one input
-  * partition per new file — so streaming parallelism tracks the archive
-  * layout exactly like the batch scan's. Column pruning and pushed filters
-  * ride the SAME reader stack as the batch path (the scan builder runs
-  * before `toMicroBatchStream`), which is the point: backfill (batch) and
-  * tail (stream) execute identical decode/filter code against identical
-  * files. */
-class GavroMicroBatchStream(path: String, schemaName: String,
-    requiredNames: Array[String], preds: Array[GavroPred],
-    readerJson: Option[String] = None,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.ReportsSourceMetrics {
-  import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit,
-    Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles}
-
-  private val log = org.slf4j.LoggerFactory.getLogger(classOf[GavroMicroBatchStream])
-
-  // Stream-level observability (surfaced into
-  // StreamingQueryProgress.sources[i].metrics via ReportsSourceMetrics):
-  // the two documented places where a trigger can silently do more than
-  // its contract suggests — forced admissions that bypass
-  // maxFiles/maxBytesPerTrigger after an OPTIMIZE, and the one
-  // at-least-once translation corner re-delivering merged content. Both
-  // also log WARN at the moment they happen, so operators can attribute
-  // a long trigger or a duplicate burst instead of discovering it in
-  // sink data.
-  //
-  // APPROXIMATIONS, per instance, counted at PLANNING time (inside
-  // latestOffset): a trigger that plans but fails before commit counts
-  // once and its WAL replay is NOT recounted; a restart resets all
-  // three to zero. Do not reconcile them 1:1 against sink-side
-  // duplicates — they answer "did this corner fire and roughly how
-  // often", not "exactly how many rows were redelivered" (which only
-  // the sink's own idempotence accounting can say).
-  private val forcedAdmissionTriggers = new java.util.concurrent.atomic.AtomicLong
-  private val forcedAdmissionFiles = new java.util.concurrent.atomic.AtomicLong
-  private val ambiguousRedeliveredFiles = new java.util.concurrent.atomic.AtomicLong
-
-  override def metrics(latestConsumedOffset: java.util.Optional[Offset])
-      : java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    m.put("forcedAdmissionTriggers", forcedAdmissionTriggers.get().toString)
-    m.put("forcedAdmissionFiles", forcedAdmissionFiles.get().toString)
-    m.put("ambiguousRedeliveredFiles", ambiguousRedeliveredFiles.get().toString)
-    m
-  }
-
-  private def listing(): Array[java.io.File] = Gavro.listDataFiles(path)
-
-  // Manifests are published put-if-absent and only ever added or
-  // retired, so a names+MTIMES fingerprint keys a cached parse — the
-  // history is re-read once per OPTIMIZE, not twice per trigger. The
-  // mtime must participate: a crashed optimize's torn manifest is healed
-  // away and the next pass can REUSE its checkpoint name for a different
-  // merge, so an identical name set does not imply identical content
-  // (names-only once served a stale parsed history across that swap).
-  @volatile private var histCache: (String, Gavro.RewriteHistory) = null
-  private def history(): Gavro.RewriteHistory = {
-    val commits = new java.io.File(path, Gavro.CommitsDir)
-    val fp = Gavro.store.list(commits)
-      .filter(_.getName.endsWith(".absorbed"))
-      // length through the STORE: a local File#length here would read 0
-      // on an object-store backend, quietly weakening the fingerprint to
-      // names+mtimes (coarse-mtime FS + reused checkpoint name + equal
-      // length could then serve a stale parsed history)
-      .map(f => s"${f.getName}:${Gavro.store.mtime(f)}:${Gavro.store.length(f)}")
-      .sorted.mkString("|")
-    val c = histCache
-    if (c != null && c._1 == fp) c._2
-    else { val h = Gavro.rewriteHistory(path); histCache = (fp, h); h }
-  }
-
-  override def initialOffset(): Offset = GavroStreamOffset("")
-  override def latestOffset(): Offset =
-    GavroStreamOffset(listing().lastOption.map(_.getName).getOrElse(""))
-
-  /** Backpressure admission control (SURVEY §4's `maxOffsetsPerTrigger`
-    * story for the landing zone, cf. the reference's first-batch
-    * saturation FLOW.md:107,413): `maxFilesPerTrigger` /
-    * `maxBytesPerTrigger` bound what one micro-batch admits, so a deep
-    * backlog (a weekend of archived files) drains in bounded batches
-    * instead of one giant first batch that blows executor memory and
-    * holds the trigger SLA hostage. At least one file is always admitted
-    * when new data exists — a single oversized file must progress, not
-    * wedge the stream. */
-  override def getDefaultReadLimit: ReadLimit = {
-    val lims: Seq[ReadLimit] =
-      maxFilesPerTrigger.map(n => ReadLimit.maxFiles(n)).toSeq ++
-        maxBytesPerTrigger.map(b => ReadLimit.maxBytes(b)).toSeq
-    lims match {
-      case Seq() => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
-
-  /** The files not yet fully consumed under start watermark `s`, in name
-    * order, each with the byte offset to resume from (0 = whole file).
-    *
-    * With no optimize history this is the plain name compare (deliver
-    * `> s` whole), as the append-only contract always was. Once the
-    * archive HAS been optimized, the durable `.absorbed` manifests
-    * ([[Gavro.rewriteHistory]]) say which merge absorbed each name and
-    * where its bytes now live, and every path — live watermark, vanished
-    * watermark, WAL replay — evaluates merged files at LEAF grain: a
-    * listed merged file is skipped when every original constituent is
-    * provably consumed, delivered whole when none are, and resumed
-    * mid-file at the first unconsumed constituent's offset when the
-    * merge straddles the watermark (constituent boundaries are block
-    * boundaries, so the resume range is exactly addressable). Evaluating
-    * merged files by leaves even when `s` itself is still listed is what
-    * keeps an optimize that absorbed files AROUND a surviving watermark
-    * from silently skipping (numeric merge below an epoch watermark) or
-    * blindly re-delivering (merge above it) their content.
-    *
-    * "Provably consumed" is deliberately conservative: leaf `l` counts
-    * as consumed iff every node of its containment chain whose lifetime
-    * overlaps the window in which the watermark can have been recorded
-    * (between `s`'s creation and its absorption — unbounded above while
-    * `s` is still live) has name ≤ `s` — whichever file contained `l`
-    * when the offset was recorded, it was ≤ the watermark and therefore
-    * consumed. When the history genuinely cannot distinguish
-    * consumed-then-merged from merged-then-never-consumed, the ambiguity
-    * resolves to re-delivery — at-least-once, never silent loss. The
-    * irreducible case (provably: a fresh stream that admitted past a
-    * pre-existing merge and a continuous stream that consumed the
-    * constituents pre-merge reach IDENTICAL (offset, listing, history)
-    * states needing opposite answers): optimizing already-consumed files
-    * while the watermark file itself SURVIVES the merge re-delivers the
-    * merged outputs once — after which `thru` covers the swap and the
-    * stream is exact again. Compacting a tailed dir therefore prefers
-    * absorbing the watermark file with its neighbors (the vanished-
-    * watermark translation is exact); the burst is the cost of leaving
-    * it behind. A watermark no manifest covers (truncate, manual
-    * deletion) is the loud error. */
-  private def deliverables(off: GavroStreamOffset,
-      all: Array[java.io.File],
-      h: Gavro.RewriteHistory): Seq[(java.io.File, Long)] = {
-    val s = off.last
-    val thru = off.thru
-    if (s.isEmpty && thru.isEmpty) return all.toSeq.map(f => (f, 0L))
-    val listed = s.isEmpty || all.exists(_.getName == s)
-    if (h.isEmpty && listed)
-      return all.filter(_.getName > s).toSeq.map(f => (f, 0L))
-    if (!listed && !h.absorbedAt.contains(s))
-      throw new IllegalStateException(
-        s"gavro stream: consumed watermark $s is no longer in the " +
-          s"committed listing at $path and no optimize manifest covers it " +
-          "— the archive was truncated or rewritten outside OPTIMIZE; " +
-          "restart from a fresh checkpoint over the rewritten archive")
-    // the window in which the name watermark can have been recorded:
-    // from s's creation (unknown = since ever for an original) to its
-    // absorption (unbounded while s is still listed)
-    val sAbsorbed = h.absorbedAt.get(s)
-    val sCreated = h.createdAt.get(s)
-    def consumedLeaf(l: String): Boolean =
-      // accounted when the merge that absorbed it is covered by `thru`,
-      // or provably ≤ the name watermark through its containment chain
-      h.absorbedAt.get(l).exists(_ <= thru) ||
-        h.chain(l).filter { n =>
-          val created = h.createdAt.get(n)
-          val absorbed = h.absorbedAt.get(n)
-          sAbsorbed.forall(hi => created.forall(_ < hi)) &&
-            sCreated.forall(lo => absorbed.forall(_ > lo))
-        }.forall(_ <= s)
-    all.toSeq.flatMap { f =>
-      val name = f.getName
-      if (!h.children.contains(name)) {
-        if (name <= s) None else Some((f, 0L))
-      } else if (h.createdAt.get(name).exists(_ <= thru)) {
-        None // the swap that created it is fully consumed per `thru`
-      } else {
-        val ls = h.leaves(name)
-        val unconsumed = ls.filterNot(t => consumedLeaf(t._1))
-        if (unconsumed.isEmpty) None
-        else if (unconsumed.size == ls.size) Some((f, 0L))
-        else Some((f, unconsumed.map(_._2).min))
-      }
-    }
-  }
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[GavroStreamOffset]
-    // single listing + history capture: the same snapshot drives the
-    // translation, the admission decision, the watermark, and the thru
-    // advance (no list-twice TOCTOU; the history parse is fingerprint-
-    // cached, so manifests are re-parsed once per optimize, not per call)
-    val all = listing()
-    val h = history()
-    val del = deliverables(s, all, h)
-    def admit(l: ReadLimit): Int = l match {
-      case _: ReadAllAvailable => del.length
-      case f: ReadMaxFiles => math.min(del.length, f.maxFiles)
-      case b: ReadMaxBytes =>
-        var n = 0; var bytes = 0L
-        def sz(i: Int): Long =
-          math.max(0L, Gavro.dataStore.length(del(i)._1) - del(i)._2)
-        while (n < del.length &&
-            (n == 0 || bytes + sz(n) <= b.maxBytes())) {
-          bytes += sz(n); n += 1
-        }
-        n
-      case c: CompositeReadLimit =>
-        c.getReadLimits.map(admit).foldLeft(del.length)(math.min)
-      case _ => del.length // rows-based limits don't apply at file grain
-    }
-    var n = admit(limit)
-    val nAdmit = n
-    val deliverableNames = del.map(_._1.getName).toSet
-    // A mid-file resume (straddled merge) must complete within the
-    // translation batch: once the end watermark is a plain listed name,
-    // a later trigger would re-deliver the merged file WHOLE. One-time,
-    // bounded overshoot of the admission limit — same precedent as the
-    // at-least-one-file progress guarantee.
-    val lastPartial = del.lastIndexWhere(_._2 > 0L)
-    if (lastPartial >= n) n = lastPartial + 1
-    val nAfterPartial = n
-    // Likewise, the end watermark cannot pass a SKIPPED (fully-consumed)
-    // file until every deliverable below it is admitted — stopping short
-    // would strand the skipped file above the watermark, and letting the
-    // watermark REGRESS below it instead would forget it was consumed.
-    // Force admission through the highest skipped name; in the steady
-    // append-only state everything skipped sorts at-or-below the
-    // watermark, so this never loosens the admission bound there. The
-    // one case it does: the first trigger after an OPTIMIZE that merged
-    // a backlog to BELOW a live watermark admits that whole merged
-    // backlog at once (bounded by the optimize outputs; per-task memory
-    // stays file-grain-bounded — the cost is one long trigger). The
-    // operational rule stands: compact a tailed dir when its consumers
-    // are near-current, not under a deep unconsumed backlog.
-    val consumedMax = all.map(_.getName).filterNot(deliverableNames)
-      .sorted.lastOption
-    consumedMax.foreach { m =>
-      val k = del.lastIndexWhere(_._1.getName < m) + 1
-      if (k > n) n = k
-    }
-    if (n > nAdmit) {
-      // Both forced admissions bypass the configured trigger limit by
-      // design (the admission contract cannot hold across a compaction
-      // boundary); make the one long micro-batch attributable.
-      forcedAdmissionTriggers.incrementAndGet()
-      forcedAdmissionFiles.addAndGet(n - nAdmit)
-      val reasons = Seq(
-        if (nAfterPartial > nAdmit) Some("mid-merged-file resume completion")
-        else None,
-        if (n > nAfterPartial) Some("consumed-watermark catch-up after OPTIMIZE")
-        else None).flatten
-    log.warn(s"gavro stream at $path: forced admission of ${n - nAdmit} " +
-        s"file(s) beyond the configured trigger limit " +
-        s"(${reasons.mkString(" + ")}) — expect one long micro-batch " +
-        "attributable to compaction")
-    }
-    // The one documented at-least-once corner: an admitted merged output
-    // whose constituents ALL sort at-or-below the consumed name watermark
-    // is content the consumer has (very likely) already seen, delivered
-    // again because the surviving-watermark translation cannot prove it.
-    if (s.last.nonEmpty) {
-      val ambiguous = del.take(n).count { case (f, o) =>
-        o == 0L && h.children.contains(f.getName) &&
-          h.leaves(f.getName).forall(_._1 <= s.last)
-      }
-      if (ambiguous > 0) {
-        ambiguousRedeliveredFiles.addAndGet(ambiguous)
-        log.warn(s"gavro stream at $path: re-delivering $ambiguous merged " +
-          s"file(s) whose constituents sort at-or-below the consumed " +
-          s"watermark ${s.last} — OPTIMIZE translation ambiguity; " +
-          "non-idempotent sinks may see duplicates once (thru will cover " +
-          "them after this batch); avoid by passing protectPrefix to " +
-          "optimize()")
-      }
-    }
-    val admitted = del.take(n).map(_._1.getName).toSet
-    // Advance `thru` over every optimize swap whose merged outputs are
-    // fully consumed after this batch (directly, or via a later swap
-    // that absorbed them and itself qualifies) — the piece of state that
-    // makes "this merge's content is all delivered" expressible when no
-    // single listed name can prove it.
-    val thruNew: String = if (h.isEmpty) s.thru else {
-      val byCp = h.createdAt.toSeq.groupBy(_._2) // cp -> its merged outputs
-      val listedNames = all.map(_.getName).toSet
-      val covered = scala.collection.mutable.Set.empty[String]
-      def outputDone(o: String): Boolean =
-        admitted.contains(o) ||
-          (listedNames.contains(o) && !deliverableNames.contains(o)) ||
-          h.absorbedAt.get(o).exists(covered.contains)
-      var changed = true
-      while (changed) {
-        changed = false
-        byCp.foreach { case (cp, outs) =>
-          if (!covered(cp) && outs.forall(t => outputDone(t._1))) {
-            covered += cp; changed = true
-          }
-        }
-      }
-      // thru is a high-watermark: the longest covered PREFIX of swaps
-      val cps = byCp.keys.toSeq.sorted
-      val prefix = cps.takeWhile(covered.contains)
-      val candidate = prefix.lastOption.getOrElse("")
-      if (candidate > s.thru) candidate else s.thru
-    }
-    if (del.isEmpty && s.last.nonEmpty && !all.exists(_.getName == s.last)) {
-      // everything the vanished watermark covered is fully merged away:
-      // advance to the newest listed name so the stream re-enters the
-      // plain append-only fast path
-      return GavroStreamOffset(
-        all.lastOption.map(_.getName).getOrElse(s.last), thruNew)
-    }
-    if (n == 0) return GavroStreamOffset(s.last, thruNew)
-    // Extend the end watermark across fully-consumed files that sort
-    // between/after the admitted deliverables — {listed ≤ end} must be
-    // exactly the consumed set, or the next trigger re-delivers them.
-    var end = ""
-    var i = 0
-    while (i < all.length &&
-        (admitted.contains(all(i).getName) ||
-          !deliverableNames.contains(all(i).getName))) {
-      end = all(i).getName; i += 1
-    }
-    GavroStreamOffset(end, thruNew)
-  }
-
-  override def reportLatestOffset(): Offset =
-    GavroStreamOffset(listing().lastOption.map(_.getName).getOrElse(""))
-  override def deserializeOffset(json: String): Offset =
-    Gavro.parseStreamOffsetLine(json, () => listing(), path)
-      .getOrElse(throw new IllegalArgumentException(s"bad gavro offset: $json"))
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GavroStreamOffset]
-    val e = end.asInstanceOf[GavroStreamOffset]
-    if (e.last.isEmpty && e.thru.isEmpty) return Array.empty
-    val all = listing()
-    // The batch is (consumed under e) minus (consumed under s), derived
-    // from the SAME durable manifests on both sides — so a WAL-replayed
-    // end offset that an optimize absorbed while the stream was down
-    // replays exactly the records the original batch covered (translated
-    // into the merged files), instead of erroring or over-reading. An
-    // end offset nothing covers throws deliverables' loud error.
-    val h = history()
-    val delS = deliverables(s, all, h)
-    val capOf: Map[String, Long] =
-      deliverables(e, all, h).map(t => t._1.getName -> t._2).toMap
-    delS.flatMap { case (f, resume) =>
-      // cap = where consumption under `e` stops in this file: absent →
-      // fully consumed under e (no cap); 0 → entirely beyond e (skip
-      // WITHOUT the footer read — a deep backlog drains in O(files),
-      // not O(files²/batch)); mid-file → the straddling constituent
-      // boundary.
-      val cap = capOf.getOrElse(f.getName, Long.MaxValue)
-      if (cap == 0L) Seq.empty
-      else GavroSkip.planFile(f, preds.toSeq)
-        .filter(p => p.start >= resume && p.start < cap)
-    }
-      .map(p => p: InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    GavroReaderFactory(schemaName, requiredNames, preds, -1, None, readerJson)
 }
 
 /** Serializable reader-side form of one pushed conjunct. For a LEAF,
@@ -1638,8 +1169,7 @@ object GavroSkip {
 
   /** Shared planning: footer-driven block split + two-level stats skip
     * (whole file first, then surviving blocks individually when the footer
-    * carries per-block stats), used by the batch scan and the micro-batch
-    * stream alike. */
+    * carries per-block stats), used by the batch scan. */
   def planFile(file: java.io.File, preds: Seq[GavroPred]): Seq[GavroInputPartition] =
     planFile(file, preds, GavroFooter.read(file))
 
@@ -2322,21 +1852,6 @@ object Gavro {
   // executor resolves its own configured implementation.
   @volatile private var _store: GavroStore = LocalFsStore
   @volatile private var _dataStore: GavroDataStore = LocalFsDataStore
-  @volatile private var _checkpointReader: CheckpointReader =
-    LocalCheckpointReader
-
-  /** [[maintain]]'s view of Spark streaming checkpoints — the third seam
-    * (see [[CheckpointReader]]): consumer positions live on the CLUSTER's
-    * checkpoint filesystem, not in a gavro table, so they get their own
-    * swappable reader instead of riding either table store. */
-  def checkpointReader: CheckpointReader = _checkpointReader
-
-  private[graft] def withCheckpointReader[A](r: CheckpointReader)(
-      body: => A): A = {
-    val r0 = _checkpointReader
-    _checkpointReader = r
-    try body finally _checkpointReader = r0
-  }
 
   /** LOCAL-MODE test seam: while installed by [[trackFileOpens]], every
     * data-file open by a [[GavroPartitionReader]] records its path here.
@@ -2431,9 +1946,9 @@ object Gavro {
     * past the latest checkpoint, the committer folds them into one
     * checkpoint file so readers list O(1) checkpoints + a bounded tail
     * instead of O(commits) records — the Delta-log compaction story at
-    * landing-zone scale (a streaming sink landing one record per 10 s
-    * epoch writes ~8.6k records/day; without compaction every reader
-    * lists and reads them all). */
+    * landing-zone scale (an archiver appending every 10 s lands ~8.6k
+    * records/day; without compaction every reader lists and reads them
+    * all). */
   val CheckpointInterval = 10
 
   private def logEntries(commits: java.io.File, suffix: String): Array[java.io.File] =
@@ -2444,11 +1959,11 @@ object Gavro {
 
   /** Resolve the committed file-name set as of commit `cut` (None =
     * latest): base = newest checkpoint at-or-before the cut, plus the
-    * tail of commit records after it. Commit-record names are a single
-    * zero-padded monotone sequence shared by batch and streaming writers
-    * (`<seq>-b` / `<seq>-e<epoch>`), so lexicographic order IS commit
-    * order — the mixed `c*`/`e*` prefixes that broke cross-writer time
-    * travel are gone. Time travel below the compaction horizon (records
+    * tail of commit records after it. Log entry names are a single
+    * zero-padded monotone sequence shared by every writer and maintenance
+    * swap (`<seq>-b` records, `<seq>-o`/`<seq>-r` checkpoints), so
+    * lexicographic order IS commit order. Time travel below the compaction
+    * horizon (records
     * folded into a checkpoint and then vacuumed by [[compactLog]]) is an
     * explicit error, never a silently-wrong snapshot. */
   private[sources] def committedNames(path: String,
@@ -2545,18 +2060,16 @@ object Gavro {
   }
 
   /** Land one commit record making `files` visible; `name` must be unique
-    * per commit (monotone for batch, epoch-deterministic for streaming so
-    * a replayed epoch republishes the SAME record idempotently). Public:
-    * an external archiver that places files by other means uses this as
-    * its visibility point.
+    * per commit (monotone: [[commitBatch]] allocates it). Public: an
+    * external archiver that places files by other means uses this as its
+    * visibility point.
     *
     * Upgrade safety: when this is the FIRST log entry in a directory that
     * already holds data files (a legacy listing-truth dir being appended
     * to), those pre-existing files are adopted into the record — the log
     * becoming the source of truth must not shrink the visible set, and a
     * later vacuum must not reap them as orphans. */
-  def writeCommit(path: String, name: String,
-      files: Seq[String], allowReplace: Boolean = false): Unit = {
+  def writeCommit(path: String, name: String, files: Seq[String]): Unit = {
     val dir = new java.io.File(path, CommitsDir)
     dir.mkdirs()
     val firstEntry = logEntries(dir, ".commit").isEmpty &&
@@ -2569,21 +2082,20 @@ object Gavro {
           .map(_.getName).filter(n => n.endsWith(".gavro") && !fresh(n))
           .sorted
       }
-    // File names land verbatim in commit records, `.absorbed` manifests
-    // (tab-separated), and the stream's offset JSON — a quote, backslash,
-    // tab, or newline would corrupt one of those encodings. Reject at the
-    // visibility point (adopted legacy names included) rather than escape
-    // in three formats. A nonconforming ADOPTED name is an upgrade
-    // problem, not a writer bug, so it gets its own migration message:
-    // the pre-log archive worked under listing-truth and hard-fails only
-    // on its first commit — tell the operator what to rename rather than
-    // implying their new writer is broken.
+    // File names land verbatim in the newline-separated commit records and
+    // checkpoints — a newline (or any other control byte) would corrupt
+    // that encoding. Reject at the visibility point (adopted legacy names
+    // included) rather than escape. A nonconforming ADOPTED name is an
+    // upgrade problem, not a writer bug, so it gets its own migration
+    // message: the pre-log archive worked under listing-truth and
+    // hard-fails only on its first commit — tell the operator what to
+    // rename rather than implying their new writer is broken.
     files.foreach(f => require(f.matches("[A-Za-z0-9._-]+"),
       s"gavro: illegal data-file name '$f' (allowed: [A-Za-z0-9._-])"))
     adopted.foreach(f => require(f.matches("[A-Za-z0-9._-]+"),
       s"gavro: pre-existing data file '$f' cannot be adopted into the " +
         "commit log — its name falls outside [A-Za-z0-9._-], which the " +
-        "log's record/manifest/offset encodings require. Rename the " +
+        "log's record encoding requires. Rename the " +
         "legacy file (content is untouched by renaming; it predates the " +
         "log) before the first logged commit to this directory."))
     val dst = new java.io.File(dir, s"$name.commit")
@@ -2591,18 +2103,12 @@ object Gavro {
     // writers that raced to the same sequence number cannot silently
     // replace each other's record (the loser's files would become
     // invisible and a later vacuum() would reap them). The loser sees
-    // FileAlreadyExistsException and the allocate-retry loops
-    // ([[commitBatch]]/[[writeEpochCommit]]) re-read the log and take the
-    // next sequence. The ONLY sanctioned same-name rewrite is a streaming
-    // epoch REPLAY (allowReplace=true, caller matched its own `e<epoch>`
-    // tag), which must republish the same record idempotently — that path
-    // replaces atomically, never through a delete+rename window where the
-    // record is missing. (How these primitives are realized — POSIX hard
-    // link / ATOMIC_MOVE here, conditional PUT on an object store — is
-    // the [[GavroStore]] contract's business, not this protocol's.)
-    val body = (adopted ++ files).mkString("\n")
-    if (allowReplace) store.atomicReplace(dst, body)
-    else store.putIfAbsent(dst, body)
+    // FileAlreadyExistsException and the allocate-retry loop
+    // ([[commitBatch]]) re-reads the log and takes the next sequence. (How
+    // these primitives are realized — POSIX hard link here, conditional
+    // PUT on an object store — is the [[GavroStore]] contract's business,
+    // not this protocol's.)
+    store.putIfAbsent(dst, (adopted ++ files).mkString("\n"))
     // Post-land validation: if a checkpoint NEWER than this record's name
     // landed while we were writing (an optimize swap, or another writer's
     // fold that didn't see us), the record sits below the base and is
@@ -2611,8 +2117,7 @@ object Gavro {
     // writer that allocated its sequence just before a swap could land a
     // successfully-written-but-forever-invisible commit. (A checkpoint
     // named exactly at this record is fine: it summarizes it.)
-    if (!allowReplace &&
-        logEntries(dir, ".checkpoint")
+    if (logEntries(dir, ".checkpoint")
           .exists(_.getName.stripSuffix(".checkpoint") > name)) {
       store.delete(dst)
       throw new java.nio.file.FileAlreadyExistsException(dst.toString, null,
@@ -2638,38 +2143,6 @@ object Gavro {
       }
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  /** Streaming epoch commit: epoch-idempotent AND sequence-monotone. A
-    * fresh epoch allocates the next shared sequence number (put-if-absent
-    * with retry, so concurrent writers on other epochs can't be silently
-    * overwritten); a REPLAYED epoch finds its prior record by the
-    * `e<epoch>` tag and rewrites it in place (same name, same
-    * deterministic file names), so replay never forks the ordering that
-    * time travel depends on. */
-  def writeEpochCommit(path: String, epochId: Long,
-      files: Seq[String]): Unit = {
-    val tag = f"e$epochId%010d"
-    val dir = new java.io.File(path, CommitsDir)
-    def priorName: Option[String] = logEntries(dir, ".commit")
-      .map(_.getName.stripSuffix(".commit"))
-      .find(_.endsWith(s"-$tag"))
-    priorName match {
-      case Some(name) => writeCommit(path, name, files, allowReplace = true)
-      case None =>
-        var attempt = 0
-        var landed = false
-        while (!landed) {
-          val name = f"${nextCommitSeq(path)}%010d-$tag"
-          try { writeCommit(path, name, files); landed = true }
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              attempt += 1
-              if (attempt > 1000) throw new java.io.IOException(
-                s"gavro: commit contention at $path — $attempt collisions")
-          }
-        }
-    }
   }
 
   /** Fold every commit record at-or-before the latest one into a single
@@ -2828,13 +2301,8 @@ object Gavro {
     * see the old snapshot until the checkpoint lands, the new one after;
     * replaced files are retired through the vacuum grace window, never
     * yanked from an in-flight scan. A crash at any step heals via
-    * [[healLog]] exactly like a crashed optimize.
-    *
-    * NOT for stream-consumed tables: outputs are re-encoded, so there is
-    * no byte-range `.absorbed` manifest and a streaming consumer's name
-    * watermark cannot translate through the swap (it would fail loudly at
-    * its next trigger). Batch/probe-read tables only — the index
-    * maintenance shape this exists for. Returns the staged file names. */
+    * [[healLog]] exactly like a crashed optimize. Returns the staged file
+    * names. */
   def rewriteTable(path: String,
       bins: String => DataFrame,
       blockBytes: Long = DefaultBlockBytes,
@@ -2873,9 +2341,7 @@ object Gavro {
     *
     * Built on [[rewriteTable]]'s swap: snapshot-pinned read, staged
     * invisible, one atomic checkpoint, crash-healed, concurrent commits
-    * survive. Same caveat too — outputs are re-encoded, so streams
-    * cannot translate a name watermark through it; batch/probe tables
-    * only. Statistics are re-derived for the NEW layout: `cols` become
+    * survive. Statistics are re-derived for the NEW layout: `cols` become
     * block-stat columns (that is the point), `statCols`/`bloomCols` add
     * further stat and bloom columns, e.g. to re-bloom a hashed key the
     * clustering displaced from write order.
@@ -3207,13 +2673,13 @@ object Gavro {
   }
 
   /** Default OPTIMIZE bin target. 64 MB merges a landing zone's drizzle
-    * of per-epoch files into scan-efficient units while staying well
+    * of per-append files into scan-efficient units while staying well
     * under a single task's comfortable input. */
   val OptimizeTargetBytes: Long = 64L << 20
 
   /** OPTIMIZE — bin-pack small committed data files into larger ones (the
-    * landing-zone small-files problem: a streaming sink dripping one file
-    * per 10 s epoch writes ~8.6k files/day, and at 100 TB every reader
+    * landing-zone small-files problem: an archiver appending one file
+    * every 10 s writes ~8.6k files/day, and at 100 TB every reader
     * pays the per-file open/footer cost). The merge is a RAW
     * byte-section copy — records are never decoded; the merged footer's
     * block index is the concatenation of the inputs' with shifted
@@ -3270,13 +2736,12 @@ object Gavro {
     * lock-gated checkpointing); two maintenance actors fighting over a
     * STALE lock is detected and the loser errors loudly. */
   def optimize(path: String,
-      targetBytes: Long = OptimizeTargetBytes,
-      protectPrefix: Seq[String] = Nil): Seq[String] = {
+      targetBytes: Long = OptimizeTargetBytes): Seq[String] = {
     val d = new java.io.File(path)
     val commits = new java.io.File(d, CommitsDir)
     require(commits.isDirectory,
       s"gavro: optimize requires a $CommitsDir log at $path")
-    withMaintenanceLock(path)(optimizeLocked(path, targetBytes, protectPrefix))
+    withMaintenanceLock(path)(optimizeLocked(path, targetBytes))
   }
 
   /** A held lock younger than this is a LIVE maintenance run (the holder
@@ -3317,8 +2782,7 @@ object Gavro {
     finally store.delete(lock)
   }
 
-  private def optimizeLocked(path: String, targetBytes: Long,
-      protectPrefix: Seq[String] = Nil): Seq[String] = {
+  private def optimizeLocked(path: String, targetBytes: Long): Seq[String] = {
     val d = new java.io.File(path)
     val commits = new java.io.File(d, CommitsDir)
     healLog(path) // resume any crashed prior swap before reading state
@@ -3327,9 +2791,7 @@ object Gavro {
     val candidates = metas.filter { case (f, m) =>
       val len = dataStore.length(f)
       m.dataEnd < len && len < targetBytes }
-    // Pack first, merge after: bins are independent merge units, and the
-    // watermark-protection rule below needs the WHOLE pass's absorbed set
-    // before any byte is copied.
+    // Pack first, merge after: bins are independent merge units.
     var bins = Vector.empty[(Byte, Vector[(java.io.File, GavroFileMeta)])]
     candidates.groupBy(_._2.codec).toSeq.sortBy(_._1).foreach {
       case (codec, group) =>
@@ -3345,46 +2807,10 @@ object Gavro {
         }
         flush()
     }
-    // Watermark-aware packing (opt-in): `protectPrefix` names EVERY live
-    // consumer's offset watermark (one name per consumer — a single
-    // consumer passes one). The one at-least-once corner of the stream's
-    // OPTIMIZE translation is a pass that absorbs a consumer's consumed
-    // files while that consumer's watermark FILE itself survives (the
-    // consumed prefix is split: its interior vanishes into merged
-    // outputs but its boundary name stays listed, and
-    // [[GavroMicroBatchStream.deliverables]] must re-deliver the merged
-    // outputs once to stay safe). So, PER WATERMARK: if this pass does
-    // not absorb that watermark's file, drop every bin absorbing a file
-    // at-or-below it — either the watermark vanishes with its prefix
-    // (exact vanished-watermark translation) or that consumer's
-    // consumed prefix is left intact. Dropping a bin can newly leave a
-    // LOWER watermark's file unabsorbed, so the rule runs to fixpoint
-    // (bins only shrink — terminates). Passing only the minimum
-    // watermark protects only that consumer; pass the full set to make
-    // the corner unreachable for every cooperating consumer. Callers
-    // that pass Nil keep the unprotected behavior exactly.
-    if (protectPrefix.nonEmpty) {
-      var changed = true
-      while (changed) {
-        val absorbedNow = bins.flatMap(_._2.map(_._1.getName)).toSet
-        val surviving = protectPrefix.filterNot(absorbedNow)
-        val kept = bins.filter(_._2.forall(
-          f => !surviving.exists(w => f._1.getName <= w)))
-        changed = kept.size != bins.size
-        bins = kept
-      }
-    }
     val merged = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Per merged output: its constituents with their byte ranges inside it
-    // — the durable `.absorbed` manifest a live stream translates its
-    // name watermark through after the swap.
-    val mergedRanges =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Seq[(String, Long, Long)])]
     val absorbed = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
     bins.foreach { case (codec, bin) =>
-      val (name, ranges) = mergeBin(d, bin, codec)
-      merged += name
-      mergedRanges += ((name, ranges))
+      merged += mergeBin(d, bin, codec)
       absorbed ++= bin.map(_._1)
       // keep-alive: a big backlog's byte copy can outlast the lock's
       // staleness bound; touching per bin keeps the holder visibly live
@@ -3411,20 +2837,6 @@ object Gavro {
     // absorbed set — the loser of any (theoretically impossible under
     // the lock) race errors loudly instead
     store.putIfAbsent(sidecar, gone.toSeq.sorted.mkString("\n"))
-    // DURABLE rewrite manifest (`.absorbed`, kept after the retire
-    // completes where the `.retire` sidecar is transient): one line per
-    // (merged, constituent, start, end) so a stream whose name watermark
-    // was absorbed can translate it — fully-covered merges skip, a
-    // straddled merge resumes at the first unconsumed constituent's
-    // offset (constituent boundaries are block boundaries by
-    // construction, so the resume range is exactly addressable). Written
-    // before the checkpoint; [[healLog]] deletes it with the `.retire`
-    // if the swap never became visible.
-    val manifest = new java.io.File(commits, s"$cpName.absorbed")
-    store.putIfAbsent(manifest,
-      mergedRanges.sortBy(_._1).map { case (m, ranges) =>
-        ranges.map { case (c, s, e) => s"$m\t$c\t$s\t$e" }.mkString("\n")
-      }.mkString("\n"))
     val content =
       ((committedNames(path, None) -- gone) ++ merged).toSeq.sorted
     // put-if-absent landing (the lock makes a collision near-impossible;
@@ -3474,34 +2886,21 @@ object Gavro {
       val name = sidecar.getName.stripSuffix(".retire")
       if (new java.io.File(commits, s"$name.checkpoint").exists())
         retireBelow(path, name, readNames(sidecar).toSet)
-      else {
-        // Swap never became visible: the merged files are plain orphans
-        // and the `.absorbed` manifest (written between `.retire` and the
-        // checkpoint) must go with the sidecar — a stale manifest could
-        // mis-translate a future stream watermark if the orphan's part
-        // index were ever reused after vacuum. An `.absorbed` WITHOUT a
-        // `.retire` is completed history (its checkpoint may have been
-        // superseded by a later optimize) and is kept: streams translate
-        // through it indefinitely.
-        store.delete(sidecar)
-        store.delete(new java.io.File(commits, s"$name.absorbed"))
-      }
+      // never visible: the merged files are plain orphans
+      else store.delete(sidecar)
     }
   }
 
   /** Merge one bin: copy each input's data section raw, emit a footer
     * with shifted block offsets, carried block stats, and folded file
     * stats; publish put-if-absent on the next part index. Returns the
-    * merged name plus each constituent's byte range inside it (inputs
-    * are concatenated in name order, so ranges are name-ordered too). */
+    * merged name. */
   private def mergeBin(d: java.io.File,
-      bin: Seq[(java.io.File, GavroFileMeta)], codec: Byte)
-      : (String, Seq[(String, Long, Long)]) = {
+      bin: Seq[(java.io.File, GavroFileMeta)], codec: Byte): String = {
     val tmp = new java.io.File(d, ".optimize-" +
       java.util.UUID.randomUUID().toString.take(12) + ".gavro.tmp")
     val out = dataStore.create(tmp)
     val blocks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ranges = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     var shift = 0L
     try {
       bin.foreach { case (f, m) =>
@@ -3516,7 +2915,6 @@ object Gavro {
           }
         } finally in.close()
         blocks ++= m.blocks.map(_ + shift)
-        ranges += ((f.getName, shift, shift + m.dataEnd))
         shift += m.dataEnd
       }
       // per-file stats: fold min/max over columns present in EVERY input
@@ -3555,7 +2953,7 @@ object Gavro {
       GavroFooter.write(out, blocks.toSeq, stats, blockStats, codec,
         blockBlooms)
     } finally out.close()
-    (landNextPart(d, tmp), ranges.toSeq)
+    landNextPart(d, tmp)
   }
 
   /** Publish a fully-written temp file under the next sequential part
@@ -3577,65 +2975,6 @@ object Gavro {
       }
     }
     landed.get
-  }
-
-  /** The durable optimize history parsed from the `.absorbed` manifests:
-    * for every merged output, its constituents with byte ranges; for
-    * every constituent, its absorbing merge and the checkpoint (= commit
-    * sequence position) the swap landed at. This is what lets a live
-    * stream survive OPTIMIZE: [[GavroMicroBatchStream]] translates a
-    * name watermark that vanished from the listing through this history
-    * instead of failing.
-    *
-    * Retention: manifests are a few lines per optimize and are parsed
-    * once per stream trigger, so growth is slow but unbounded; a
-    * retention policy may delete any manifest whose checkpoint is ≤
-    * every consumer's committed `thru` (all its content is provably
-    * consumed, so no watermark can still need the translation). Not
-    * automated here — the table has no registry of its consumers, the
-    * same reason Delta's log retention is a configured duration rather
-    * than consumer-tracked. */
-  private[sources] case class RewriteHistory(
-      children: Map[String, Seq[(String, Long, Long)]],
-      createdAt: Map[String, String],
-      parentOf: Map[String, String],
-      absorbedAt: Map[String, String]) {
-    def isEmpty: Boolean = children.isEmpty
-    /** Original (leaf) constituents of a listed file with their byte
-      * ranges inside it, via recursive expansion through chained merges.
-      * A non-merged name expands to itself. */
-    def leaves(name: String): Seq[(String, Long, Long)] =
-      children.get(name) match {
-        case None => Seq((name, 0L, Long.MaxValue))
-        case Some(cs) => cs.flatMap { case (c, s, e) =>
-          children.get(c) match {
-            case None => Seq((c, s, e))
-            case Some(_) => leaves(c).map { case (l, ls, le) =>
-              (l, s + ls, s + le) }
-          }
-        }
-      }
-    /** The containment chain of a leaf: itself, then each merged output
-      * that absorbed it, upward. */
-    def chain(name: String): Seq[String] =
-      name +: parentOf.get(name).map(chain).getOrElse(Seq.empty)
-  }
-
-  private[sources] def rewriteHistory(path: String): RewriteHistory = {
-    val commits = new java.io.File(path, CommitsDir)
-    val rows = logEntries(commits, ".absorbed").flatMap { f =>
-      val cp = f.getName.stripSuffix(".absorbed")
-      store.read(f).map { line =>
-        val Array(m, c, s, e) = line.split('\t')
-        (cp, m, c, s.toLong, e.toLong)
-      }
-    }
-    RewriteHistory(
-      children = rows.groupBy(_._2).map { case (m, rs) =>
-        m -> rs.sortBy(_._4).map(r => (r._3, r._4, r._5)).toSeq },
-      createdAt = rows.map(r => r._2 -> r._1).toMap,
-      parentOf = rows.map(r => r._3 -> r._2).toMap,
-      absorbedAt = rows.map(r => r._3 -> r._1).toMap)
   }
 
   /** Retention grace for [[vacuum]]: an IN-FLIGHT job's files look
@@ -3681,284 +3020,9 @@ object Gavro {
     dead.map(_.getName).sorted.toSeq
   }
 
-  /** The `.absorbed` retention policy [[RewriteHistory]]'s scaladoc
-    * documents, implemented: delete rewrite manifests no consumer can
-    * still need, bounded by a CALLER-supplied floor — the minimum
-    * committed `thru` across the table's consumers (the table has no
-    * registry of its consumers, so the floor is configured by the
-    * deployment exactly like Delta's log retention duration; pass the
-    * smallest `thru` any live checkpoint carries, or a checkpoint name
-    * old enough that every consumer is provably past it). Manifests
-    * whose checkpoint is ≤ the floor have had ALL their merged outputs
-    * consumed by every consumer, so no watermark should still need their
-    * translation.
-    *
-    * Two protections keep the deletion from widening the at-least-once
-    * corner:
-    *
-    *   - '''chain pinning''': a manifest ≤ the floor is KEPT while any
-    *     kept manifest lists one of its merged outputs as a constituent —
-    *     deleting the lower link of a chained merge would make
-    *     [[RewriteHistory.leaves]] stop at the intermediate name and turn
-    *     an exact mid-chain translation into a re-delivery;
-    *   - '''in-flight exclusion''': a manifest whose `.retire` sidecar is
-    *     still present belongs to [[healLog]]'s crash recovery, not to
-    *     history, and is never touched.
-    *
-    * After retention, a stream whose watermark is a listed name (every
-    * live, reasonably-current consumer) continues untouched; a stream
-    * restarted from a checkpoint whose watermark needed a deleted
-    * manifest hits [[GavroMicroBatchStream.deliverables]]'s loud
-    * truncated-archive error — never a silent skip. Operational rule
-    * (same family as OPTIMIZE's): run retention when consumers are
-    * near-current, because a consumer whose offset still names a
-    * VANISHED file normalizes it to a listed name on its next trigger.
-    * Runs under the maintenance lock — it mutates the commit log and
-    * must not race an optimize writing new manifests. Returns the
-    * deleted manifest file names. */
-  def vacuumManifests(path: String, thruFloor: String): Seq[String] = {
-    val commits = new java.io.File(path, CommitsDir)
-    require(commits.isDirectory,
-      s"gavro: vacuumManifests requires a $CommitsDir log at $path")
-    require(thruFloor.nonEmpty,
-      "gavro: vacuumManifests needs an explicit consumer floor — the " +
-        "minimum committed `thru` across the table's consumers")
-    withMaintenanceLock(path) {
-      val manifests = logEntries(commits, ".absorbed").toSeq.map { f =>
-        val cp = f.getName.stripSuffix(".absorbed")
-        val rows = store.read(f).map { line =>
-          val parts = line.split('\t')
-          (parts(0), parts(1)) // (merged output, constituent)
-        }
-        (cp, f, rows)
-      }
-      val inFlight = manifests.map(_._1).filter(cp =>
-        store.exists(new java.io.File(commits, s"$cp.retire"))).toSet
-      var kept = manifests.filter(m => m._1 > thruFloor || inFlight(m._1))
-      var deletable = manifests.filterNot(m =>
-        m._1 > thruFloor || inFlight(m._1))
-      var changed = true
-      while (changed) {
-        changed = false
-        val keptConstituents = kept.flatMap(_._3.map(_._2)).toSet
-        val (pinned, rest) = deletable.partition(
-          m => m._3.exists(r => keptConstituents(r._1)))
-        if (pinned.nonEmpty) { kept ++= pinned; deletable = rest; changed = true }
-      }
-      deletable.foreach { case (_, f, _) =>
-        if (!store.delete(f) && store.exists(f))
-          throw new java.io.IOException(
-            s"gavro: cannot delete retired manifest $f")
-      }
-      deletable.map(_._2.getName).sorted
-    }
-  }
-
-  /** THE gavro stream-offset parser, shared by the stream's own
-    * [[GavroMicroBatchStream.deserializeOffset]] and [[maintain]]'s
-    * checkpoint reads — one lenient grammar, so maintenance can never
-    * silently ignore an offset the stream itself honors. Handles the
-    * name-watermark form and the legacy count-based `{"files":N}` form
-    * (translated against the table's current sorted listing; a listing
-    * SHORTER than the consumed count means the archive was rewritten
-    * while the stream was down: fail loudly, never clamp — clamping
-    * would mark never-consumed records consumed). None for lines that
-    * are not gavro offsets (the v1 header, the batch-metadata json). */
-  private[sources] def parseStreamOffsetLine(line: String,
-      listing: () => Array[java.io.File],
-      tablePath: String): Option[GavroStreamOffset] =
-    """"last":"([^"]*)"""".r.findFirstMatchIn(line).map { m =>
-      val thru = """"thru":"([^"]*)"""".r.findFirstMatchIn(line)
-        .map(_.group(1)).getOrElse("") // pre-thru checkpoints: none covered
-      GavroStreamOffset(m.group(1), thru)
-    }.orElse {
-      """"files":(\d+)""".r.findFirstMatchIn(line).map { m =>
-        val n = m.group(1).toInt
-        val files = listing()
-        if (n > files.length) throw new IllegalStateException(
-          s"gavro stream: legacy offset consumed $n files but only " +
-            s"${files.length} are listed at $tablePath — the archive was " +
-            "rewritten; restart from a fresh checkpoint")
-        GavroStreamOffset(if (n == 0) "" else files(n - 1).getName)
-      }
-    }
-
-  /** The gavro offset of batch `batchId`, LOUD on absence or
-    * unparseability: a batch id that appears in the checkpoint must have
-    * a readable gavro offset — a missing file is a torn/partially
-    * restored checkpoint, and a file with no gavro offset line is some
-    * OTHER query's checkpoint; silently guessing either way would strip
-    * the consumer of maintenance protection. Also validates that the
-    * parsed watermark is a legal gavro data-file name: a lenient-grammar
-    * match from some other source's offset JSON must not masquerade as
-    * this table's position (single-gavro-source checkpoints are the
-    * supported contract). Parser errors are re-wrapped with the offsets
-    * file path so a multi-consumer maintain names WHICH checkpoint is
-    * stale — distinguished by TYPE ([[MaintainCheckpointException]]),
-    * never by message matching. All reads go through the
-    * [[checkpointReader]] seam: the STREAMING CHECKPOINT is Spark's
-    * artifact on the driver/cluster filesystem, not a gavro store
-    * object, and on a real cluster it lives on HDFS/object store where
-    * plain java.io cannot reach. */
-  private def readCheckpointOffset(offsetsDir: String, batchId: Long,
-      listing: () => Array[java.io.File],
-      tablePath: String): GavroStreamOffset = {
-    val f = s"$offsetsDir/$batchId"
-    val lines = checkpointReader.readLines(f).getOrElse(
-      throw new MaintainCheckpointException(
-        s"gavro maintain: offsets/${batchId} is missing from " +
-          s"$offsetsDir — torn or partially restored " +
-          "checkpoint; refusing to guess the consumer's position"))
-    val off =
-      try lines.reverseIterator
-        .flatMap(l => parseStreamOffsetLine(l, listing, tablePath))
-        .nextOption()
-        .getOrElse(throw new MaintainCheckpointException(
-          s"gavro maintain: no gavro offset found in $f — is this the " +
-            "checkpoint of a gavro-source query?"))
-      catch {
-        case e: MaintainCheckpointException => throw e
-        case e: IllegalStateException =>
-          throw new IllegalStateException(
-            s"gavro maintain: while reading $f: ${e.getMessage}", e)
-      }
-    require(off.last.matches("[A-Za-z0-9._-]*"),
-      s"gavro maintain: offset in $f names '${off.last}', which is not " +
-        "a gavro data-file name — multi-source checkpoints are not " +
-        "supported; pass the checkpoint of a single-gavro-source query")
-    off
-  }
-
-  /** [[readCheckpointOffset]]'s OWN diagnostics, typed so the catch that
-    * wraps parser errors with the file path can pass them through without
-    * string-matching messages (a null-message exception would NPE the
-    * old `getMessage.contains` guard and mask the real diagnostic). */
-  private final class MaintainCheckpointException(msg: String)
-      extends IllegalStateException(msg)
-
-  private def batchIds(dir: String): Seq[Long] =
-    checkpointReader.list(dir).getOrElse(Seq.empty)
-      .flatMap(_.toLongOption).sorted
-
-  /** The loud/lenient boundary for a checkpoint directory, in one place:
-    * a MISSING directory throws (mistyped path — silently stripping a
-    * consumer of protection is the worst default); an EMPTY directory is
-    * a configured-but-unstarted consumer (fresh, true); a non-empty
-    * directory WITHOUT `offsets/` throws (it exists but is not a
-    * streaming checkpoint — e.g. the parent of the real one). */
-  private def checkpointDirKind(ckpt: String): Boolean = {
-    val children = checkpointReader.list(ckpt).getOrElse(
-      throw new IllegalArgumentException(
-        s"requirement failed: gavro maintain: checkpoint directory $ckpt " +
-          "does not exist — a mistyped path would silently strip its " +
-          "consumer of watermark protection"))
-    if (children.isEmpty) true
-    else {
-      require(checkpointReader.list(s"$ckpt/offsets").isDefined,
-        s"gavro maintain: $ckpt exists but has no offsets/ directory — " +
-          "it is not a streaming checkpoint (did you pass the parent of " +
-          "the real checkpoint?)")
-      false
-    }
-  }
-
-  private def committedOffset(ckpt: String,
-      listing: () => Array[java.io.File],
-      tablePath: String): Option[GavroStreamOffset] =
-    batchIds(s"$ckpt/commits").lastOption
-      .map(readCheckpointOffset(s"$ckpt/offsets", _, listing, tablePath))
-
-  /** A gavro stream's last fully-COMMITTED position, read from its Spark
-    * Structured Streaming checkpoint: the offset of the highest batch id
-    * present in `commits/`. None when no batch has committed yet —
-    * including an EMPTY checkpoint directory, which is how a
-    * configured-but-not-yet-started consumer looks (it must not abort
-    * the nightly job). LOUD on a missing directory, on an existing
-    * directory that is not a streaming checkpoint, and on a committed
-    * batch whose offset is unreadable (see [[readCheckpointOffset]]).
-    * `tablePath` resolves legacy count-based offsets against the
-    * table's listing. */
-  def checkpointPosition(checkpointDir: String,
-      tablePath: String): Option[GavroStreamOffset] =
-    if (checkpointDirKind(checkpointDir)) None
-    else committedOffset(checkpointDir, () => listDataFiles(tablePath),
-      tablePath)
-
-  /** One consumer's constraints on maintenance: the watermark NAMES to
-    * protect (committed position AND the latest planned-but-uncommitted
-    * offset — a crashed batch replays against its planned end, so files
-    * it names must not be split away under it) and its contribution to
-    * the retention floor (only the COMMITTED `thru` counts; a consumer
-    * with nothing committed yet contributes "" and thereby blocks
-    * manifest retention — its batch-0 replay may need any of them). */
-  private def consumerConstraint(path: String,
-      ckpt: String): (Seq[String], String) = {
-    if (checkpointDirKind(ckpt)) return (Seq.empty, "")
-    // one table listing per consumer, shared by both legacy translations
-    lazy val files = listDataFiles(path)
-    val listing = () => files
-    val committed = committedOffset(ckpt, listing, path)
-    val committedId = batchIds(s"$ckpt/commits").lastOption
-    val offsetsDir = s"$ckpt/offsets"
-    val plannedId = batchIds(offsetsDir).lastOption
-    // steady state (idle consumer): planned == committed — one read
-    val planned = plannedId.filterNot(committedId.contains)
-      .map(readCheckpointOffset(offsetsDir, _, listing, path))
-    val names = (committed.toSeq ++ planned.toSeq)
-      .map(_.last).filter(_.nonEmpty).distinct
-    (names, committed.map(_.thru).getOrElse(""))
-  }
-
-  /** What [[maintain]] did, for the operator's log: merged outputs, the
-    * watermark set that protected the pass, the retention floor applied
-    * (None = some consumer has not yet crossed any optimize swap, so no
-    * manifest is provably disposable), manifests deleted, orphaned data
-    * files reclaimed. */
-  case class MaintenanceReport(merged: Seq[String],
-      protectedWatermarks: Seq[String], thruFloor: Option[String],
-      manifestsDeleted: Seq[String], orphansDeleted: Seq[String])
-
-  /** The NIGHTLY MAINTENANCE JOB, one call: read every live consumer's
-    * position from its streaming checkpoint and run the full cooperative
-    * cycle —
-    *
-    *   1. OPTIMIZE with `protectPrefix` = the consumers' watermark set
-    *      (committed and planned), so the pass never splits a prefix a
-    *      consumer at a snapshotted position has consumed;
-    *   2. `.absorbed` manifest RETENTION with the floor = the minimum
-    *      committed `thru` across consumers (skipped while any consumer
-    *      has not yet crossed a swap — nothing is provably disposable);
-    *   3. VACUUM of retired data files past the grace window.
-    *
-    * This closes the loop the piecewise APIs left to the operator: the
-    * caller no longer needs to know what a watermark or a `thru` is —
-    * only where its consumers' checkpoints live. Positions are a
-    * SNAPSHOT taken at call time: consumers may keep running, and one
-    * that advances DURING the pass re-enters the documented
-    * at-least-once fallback for content it consumed mid-pass (safe,
-    * observable via `ambiguousRedeliveredFiles`, never lost) — so run
-    * maintenance when consumers are near-current, the same operational
-    * rule OPTIMIZE always had. A checkpoint directory that is not a
-    * streaming checkpoint fails loudly rather than silently dropping
-    * its consumer's protection. */
-  def maintain(path: String, checkpointDirs: Seq[String],
-      targetBytes: Long = OptimizeTargetBytes,
-      graceMs: Long = VacuumGraceMs): MaintenanceReport = {
-    val constraints = checkpointDirs.map(consumerConstraint(path, _))
-    val watermarks = constraints.flatMap(_._1).distinct.sorted
-    val merged = optimize(path, targetBytes, protectPrefix = watermarks)
-    val floors = constraints.map(_._2)
-    val floor =
-      if (floors.nonEmpty && floors.forall(_.nonEmpty)) Some(floors.min)
-      else None
-    val deleted = floor.map(vacuumManifests(path, _)).getOrElse(Seq.empty)
-    val orphans = vacuum(path, graceMs)
-    MaintenanceReport(merged, watermarks, floor, deleted, orphans)
-  }
-
   /** Next shared commit sequence number: one zero-padded counter across
-    * batch AND streaming records so lexicographic name order is commit
-    * order (checkpoint names participate too — a checkpoint summarizes
+    * every writer's records so lexicographic name order is commit order
+    * (checkpoint names participate too — a checkpoint summarizes
     * the record it is named after). */
   private[sources] def nextCommitSeq(path: String): Int = {
     val dir = new java.io.File(path, CommitsDir)
@@ -4053,23 +3117,6 @@ object Gavro {
       kv * m + sv
     })
   }
-
-  /** The STRING-key (or any non-integral-key) router: derives an integral
-    * slot column `slotCol = pmod(xxhash64(key), m)` and exact-partitions
-    * on it — every output partition is provably single-valued on the SLOT
-    * (not the key), so writing `slotCol` into the record and its footer
-    * stats gives hash-bucket file pruning (`slot IN (…)` skips whole
-    * files) and KeyGroupedPartitioning over the slot, the layout a
-    * string-keyed table (LSH band keys) needs. The slot expression is
-    * Spark's own `xxhash64` — recompute it with the same expression at
-    * probe time and the values agree by construction. Returns the frame
-    * WITH the slot column; callers persist it (schema + stats) or drop it
-    * after routing. */
-  def exactPartitionHash(df: DataFrame, key: String, m: Int,
-      slotCol: String): DataFrame =
-    exactPartition(
-      df.withColumn(slotCol, pmod(xxhash64(col(key)), lit(m)).cast("int")),
-      slotCol, m)
 
   /** The one RDD hop shared by the exact routers: a deterministic
     * partitioner over a precomputed partition index — Spark's DataFrame

@@ -94,12 +94,6 @@ trait GavroStore {
 
   def exists(f: java.io.File): Boolean
 
-  /** Object size in bytes (0 when absent) — lets content-sensitive
-    * fingerprints (the stream's rewrite-history cache key) stay
-    * content-derived on every backend instead of falling back to a
-    * local-filesystem length that an object-store impl cannot answer. */
-  def length(f: java.io.File): Long
-
   /** The non-empty lines of a small published object. */
   def read(f: java.io.File): Seq[String]
 }
@@ -127,8 +121,9 @@ trait GavroStore {
   *   - '''openAt''' reads from `offset` to EOF; the bytes returned are
   *     exactly the bytes `create` wrote (no torn mid-object reads after
   *     close). Reading a missing object throws.
-  *   - '''length'''/'''list'''/'''delete''' as on the coordination seam:
-  *     current-state listing, idempotent-ish delete.
+  *   - '''length''' is the object's size (0 when absent);
+  *     '''list'''/'''delete''' as on the coordination seam: current-state
+  *     listing, idempotent-ish delete.
   *
   * Performance note: implementations are called from executor tasks —
   * one `create` per writer task, one `openAt` per planned partition, a
@@ -179,48 +174,6 @@ trait GavroDataStore {
   }
 }
 
-/** Read-only view of a Spark Structured Streaming CHECKPOINT — the THIRD
-  * seam, deliberately separate from [[GavroStore]]/[[GavroDataStore]]:
-  * the checkpoint is SPARK's artifact on whatever filesystem the
-  * streaming query was configured with (driver-local in this sandbox,
-  * HDFS/object store on a real cluster), never a gavro table object, so
-  * routing its reads through the table stores would make every consumer
-  * invisible the moment a non-filesystem store is configured.
-  * [[graft.sources.Gavro.maintain]] resolves consumer positions through
-  * this trait; a cluster deployment implements these two methods over
-  * its checkpoint filesystem and the one-call nightly job reaches HDFS
-  * checkpoints unchanged. */
-trait CheckpointReader {
-  /** Child NAMES of `dir` (no paths, no order guarantee), or None when
-    * `dir` does not exist or is not a directory — callers distinguish
-    * "missing" (loud: mistyped path) from "empty" (lenient: configured
-    * but unstarted consumer). */
-  def list(dir: String): Option[Seq[String]]
-
-  /** The text lines of `file`, or None when it is not a readable file. */
-  def readLines(file: String): Option[Seq[String]]
-}
-
-/** Local-filesystem checkpoint reads (the sandbox default). */
-object LocalCheckpointReader extends CheckpointReader {
-  override def list(dir: String): Option[Seq[String]] = {
-    val d = new java.io.File(dir)
-    // listFiles can return null even after a true isDirectory (the
-    // directory vanished between the two calls, or an I/O error) — that
-    // is the "missing" case, not an NPE deep inside maintain.
-    if (d.isDirectory) Option(d.listFiles()).map(_.map(_.getName).toSeq)
-    else None
-  }
-
-  override def readLines(file: String): Option[Seq[String]] = {
-    val f = new java.io.File(file)
-    if (f.isFile) {
-      import scala.jdk.CollectionConverters._
-      Some(java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq)
-    } else None
-  }
-}
-
 /** The bare-filesystem realization (this sandbox, NFS-free local disks):
   * put-if-absent = hard link from a fully-written temp (atomic
   * create-with-content on POSIX), atomic replace = `ATOMIC_MOVE` +
@@ -265,8 +218,6 @@ object LocalFsStore extends GavroStore {
   override def delete(f: java.io.File): Boolean = f.delete()
 
   override def exists(f: java.io.File): Boolean = f.exists()
-
-  override def length(f: java.io.File): Long = f.length()
 
   override def read(f: java.io.File): Seq[String] =
     java.nio.file.Files.readAllLines(f.toPath)

@@ -1033,43 +1033,6 @@ class GavroSourceSpec extends SparkSpec {
     assert(read.count() == frame.count())
   }
 
-  test("batch and streaming commits share one monotone order for time travel") {
-    val out = tmpDir("mixedlog")
-    val events = Tables.events(spark, dir)
-    val frame = events.select(AvroCodec.requestLogRec.as("rec")).select(col("rec.*"))
-      .withColumn("created_at",
-        expr("timestamp_micros(unix_millis(created_at) * 1000)"))
-    val n = frame.count()
-    // batch commit 0, then a streaming-style epoch commit, then batch 2
-    frame.filter(col("id") < n / 3).write.format("gavro")
-      .option("schema", "request_log").mode("overwrite").save(out)
-    val epochFile = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".gavro")).minBy(_.getName)
-    val planted = new java.io.File(out, "part-e0000000005-00000.gavro")
-    java.nio.file.Files.copy(epochFile.toPath, planted.toPath)
-    Gavro.writeEpochCommit(out, 5L, Seq(planted.getName))
-    frame.filter(col("id") >= 2 * n / 3).write.format("gavro")
-      .option("schema", "request_log").mode("append").save(out)
-    val names = new java.io.File(out, Gavro.CommitsDir).listFiles()
-      .map(_.getName).filter(_.endsWith(".commit")).sorted
-      .map(_.stripSuffix(".commit"))
-    assert(names.length == 3, names.mkString(","))
-    // lexicographic order IS commit order: seq prefixes 0,1,2
-    assert(names.map(_.takeWhile(_.isDigit).toInt).toSeq == Seq(0, 1, 2))
-    // asOf the EPOCH commit sees batch-0 + the epoch file, not batch-2
-    val asOfEpoch = Gavro.listDataFiles(out, Some(names(1))).map(_.getName)
-    assert(asOfEpoch.contains(planted.getName))
-    assert(asOfEpoch.contains(epochFile.getName))
-    val full = Gavro.listDataFiles(out, None).map(_.getName)
-    assert(asOfEpoch.length < full.length)
-    // epoch REPLAY rewrites the same record in place — no new sequence
-    Gavro.writeEpochCommit(out, 5L, Seq(planted.getName))
-    val after = new java.io.File(out, Gavro.CommitsDir).listFiles()
-      .map(_.getName).filter(_.endsWith(".commit")).sorted
-      .map(_.stripSuffix(".commit"))
-    assert(after.toSeq == names.toSeq, after.mkString(","))
-  }
-
   test("commit-log checkpoint: O(1)+tail reads, compaction, explicit horizon") {
     val out = tmpDir("cklog")
     val events = Tables.events(spark, dir)
@@ -1339,23 +1302,29 @@ class GavroSourceSpec extends SparkSpec {
     val desc = scan.head.scan.description()
     assert(desc.contains(s"SinceCommit: $first"), desc)
     assert(scan.head.scan.readSchema().fieldNames.toSeq == Seq("endpoint"))
-    // the stream refuses the batch-only option instead of ignoring it
-    // (the failure may surface at start() or asynchronously on the first
-    // trigger — drive to completion to observe it either way)
-    val err = intercept[Exception] {
-      val q = spark.readStream.format("gavro").option("schema", "request_log")
-        .option("sinceCommit", first).load(arch)
-        .writeStream.format("noop")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("since-ck").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    // gavro is batch-only: a stream read or write is refused when the
+    // query starts, before any batch runs (a query that does start is
+    // stopped at once, so a regression cannot leave a stream running)
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: causes(t.getCause)
-    assert(causes(err).exists(_.getMessage != null) &&
-      causes(err).exists(c => Option(c.getMessage).exists(_.contains("batch read options"))),
-      causes(err).map(_.getMessage).mkString(" | "))
+    def refusedAtStart(
+        start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      val msgs = causes(intercept[Exception](start.stop()))
+        .flatMap(c => Option(c.getMessage))
+      assert(msgs.exists(m => m.contains("gavro") &&
+        m.toLowerCase.contains("stream")), msgs.mkString(" | "))
+    }
+    def ckpt() = java.nio.file.Files.createTempDirectory("gavro-ck").toString
+    refusedAtStart(spark.readStream.format("gavro")
+      .option("schema", "request_log").load(arch)
+      .writeStream.format("noop").option("checkpointLocation", ckpt()).start())
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream(
+      org.apache.spark.sql.Encoders.row(spark.read.format("gavro")
+        .option("schema", "request_log").load(arch).schema),
+      spark.sqlContext)
+    refusedAtStart(input.toDF().writeStream.format("gavro")
+      .option("schema", "request_log").option("checkpointLocation", ckpt())
+      .start(tmpDir("stream_sink")))
     // the failed query must not leak into later suites' shared-session
     // awaitAnyTermination calls (Spark retains terminated queries'
     // exceptions until resetTerminated)
@@ -1426,7 +1395,7 @@ class GavroSourceSpec extends SparkSpec {
     assert(delta.select(col("id")).collect().map(_.getLong(0)).toSet == oddIds)
   }
 
-  test("commit records are put-if-absent; only an epoch replay may rewrite") {
+  test("commit records are put-if-absent") {
     val out = tmpDir("putifabsent")
     new java.io.File(out, "a.gavro").createNewFile()
     Gavro.writeCommit(out, "0000000000-b", Seq("a.gavro"))
@@ -1440,9 +1409,6 @@ class GavroSourceSpec extends SparkSpec {
       Gavro.writeCommit(out, "0000000000-b", Seq("b.gavro"))
     }
     assert(Gavro.listDataFiles(out).map(_.getName).toSeq == Seq("a.gavro"))
-    // The sanctioned same-name rewrite: an epoch REPLAY (allowReplace).
-    Gavro.writeCommit(out, "0000000000-b", Seq("b.gavro"), allowReplace = true)
-    assert(Gavro.listDataFiles(out).map(_.getName).toSeq == Seq("b.gavro"))
   }
 
   test("two interleaved committers: every commit visible, total asOf order") {
@@ -1753,59 +1719,6 @@ class GavroSourceSpec extends SparkSpec {
     }
     assert(got == 1000L)
     assert(opened.size == 3, s"cell filter should open 3 files: $opened")
-  }
-
-  test("exactPartitionHash: string keys route by hash slot; KGP over the slot; multi-valued fallback") {
-    import graft.sources.Gavro
-    val base = spark.range(3000).select(col("id").as("doc_id"),
-      (col("id") % 6).cast("int").as("band_idx"),
-      md5((col("id") % 37).cast("string")).as("band_key"))
-    val routed = Gavro.exactPartitionHash(base, "band_key", 8, "slot")
-    assert(routed.rdd.getNumPartitions == 8)
-    // every partition single-valued on the DERIVED slot; the slot is
-    // Spark's own xxhash64, so a reader recomputing pmod(xxhash64(k), m)
-    // lands on the same value
-    val slots = routed.rdd.mapPartitionsWithIndex { (pid, it) =>
-      it.map(r => (pid, r.getInt(r.fieldIndex("slot"))))
-    }.collect()
-    assert(slots.forall { case (pid, s) => s == pid })
-    assert(routed.count() == 3000)
-    val out = tmpDir("keyed_hash")
-    Gavro.write(routed.select(expr(
-        "to_avro_graft(struct(doc_id, band_idx, band_key, slot), 'lsh_bands')")
-        .as("bin"), col("slot")),
-      out, statCols = Seq("slot"))
-    def readBands(keyed: Boolean) = {
-      val r = spark.read.format("gavro").option("schema", "lsh_bands")
-      (if (keyed) r.option("partitionKey", "slot") else r).load(out)
-    }
-    // clustered agg containing the slot: zero exchange (a groupBy over
-    // the string key rides the slot's co-location — the string-keyed KGP
-    // story the hash router exists for)
-    val keyedRes = readBands(keyed = true)
-      .groupBy(col("slot"), col("band_key")).agg(count(lit(1)).as("n"))
-    assert(shuffleCount(keyedRes) == 0)
-    val plainRes = readBands(keyed = false)
-      .groupBy(col("slot"), col("band_key")).agg(count(lit(1)).as("n"))
-    assert(keyedRes.collect().map(_.toString).sorted.toSeq ==
-      plainRes.collect().map(_.toString).sorted.toSeq)
-    // multi-valued fallback: the same rows written WITHOUT the exact
-    // router leave files spanning slots — the keyed read must fall back
-    // to an exchange, never a wrong grouping
-    val out2 = tmpDir("keyed_hash_fb")
-    Gavro.write(base
-        .withColumn("slot", pmod(xxhash64(col("band_key")), lit(8)).cast("int"))
-        .repartition(4)
-        .select(expr(
-          "to_avro_graft(struct(doc_id, band_idx, band_key, slot), 'lsh_bands')")
-          .as("bin"), col("slot")),
-      out2, statCols = Seq("slot"))
-    val fb = spark.read.format("gavro").option("schema", "lsh_bands")
-      .option("partitionKey", "slot").load(out2)
-      .groupBy(col("slot"), col("band_key")).agg(count(lit(1)).as("n"))
-    assert(shuffleCount(fb) >= 1)
-    assert(fb.collect().map(_.toString).sorted.toSeq ==
-      plainRes.collect().map(_.toString).sorted.toSeq)
   }
 
   test("OR trees push: no FilterExec, both-branch block skip, rows exact")(blockTasks {
