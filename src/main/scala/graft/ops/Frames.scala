@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -19,15 +19,15 @@ import graft.sources.Tables
   *   - latest-window selection   (reference: region_aggregator.py:32-38)
   *
   * Streaming discipline is preserved: every aggregating builder applies
-  * `withWatermark` AFTER the union and once per frame (reference:
-  * kpi_aggregator.py:180, FLOW.md:411-412) — a no-op under batch input, the
-  * real thing when the same builder runs over `readStream` (see
-  * graft.streaming). Window durations are scaled (seconds → minutes) to the
-  * fixture's 30-day span; shapes and expressions are unchanged.
+  * `withWatermark` after its one normalizing projection and once per frame
+  * (reference: kpi_aggregator.py:180, FLOW.md:411-412) — a no-op under
+  * batch input, the real thing when the same builder runs over `readStream`
+  * (see graft.streaming). Window durations are scaled (seconds → minutes)
+  * to the fixture's 30-day span; shapes and expressions are unchanged.
   *
-  * Scale notes (100 TB lens): each frame is scan → narrow projections →
-  * union (no shuffle) → single windowed groupBy (one shuffle, map-side
-  * partial agg). No joins, no collect, no UDFs; everything whole-stage
+  * Scale notes (100 TB lens): each frame is one scan → one filter and
+  * narrow projection (no shuffle) → single windowed groupBy (one shuffle,
+  * map-side partial agg). No joins, no collect, no UDFs; everything whole-stage
   * codegen. Sliding windows multiply rows by duration/slide (3× for KPI)
   * before the exchange — that fan-out is inherent to the operator and is
   * what Spark's own `window()` does.
@@ -43,38 +43,30 @@ object Frames {
   private val TrafficWindow = "15 minutes"
   private val WatermarkDelay = "10 minutes"
 
-  /** P3/P4/P6/P7/U1: normalize the three source streams onto one schema with
-    * lit/null padding, then 3-way unionByName
-    * (reference: kpi_aggregator.py:149-179). `purchase` events play orders,
-    * `signup` events play sessions, click/view/error play request_log.
+  /** P3/P4/P6/P7/U1: normalize orders, sessions and requests onto one
+    * schema (reference: kpi_aggregator.py:149-179). `purchase` events play
+    * orders, `signup` events play sessions, click/view/error play
+    * request_log. The reference unions three projections because its events
+    * arrive on three Kafka topics; here they arrive on one stream, so one
+    * filter plus one `when` projection yields the same rows from one scan
+    * (a union would scan every micro-batch once per arm). The DuckDB oracle
+    * keeps the three-arm `UNION ALL` as the independent reference.
     */
   def kpiNormalize(events: DataFrame): DataFrame = {
-    val e = Synth.eventTime(events)
-    val orderEvents = e.filter(col("event_type") === "purchase").select(
-      col("ts").as("event_time"),
-      lit(0).as("active_session_count"),
-      col("value").cast("double").as("revenue_amount"),
-      lit(1).as("order_count"),
-      lit(0).as("request_count"),
-      lit(0).as("error_count"),
-      lit(null).cast("double").as("latency_ms"))
-    val sessionEvents = e.filter(col("event_type") === "signup").select(
-      col("ts").as("event_time"),
-      lit(1).as("active_session_count"),
-      lit(0.0).as("revenue_amount"),
-      lit(0).as("order_count"),
-      lit(0).as("request_count"),
-      lit(0).as("error_count"),
-      lit(null).cast("double").as("latency_ms"))
-    val requestEvents = e.filter(col("event_type").isin("click", "view", "error")).select(
-      col("ts").as("event_time"),
-      lit(0).as("active_session_count"),
-      lit(0.0).as("revenue_amount"),
-      lit(0).as("order_count"),
-      lit(1).as("request_count"),
-      when(col("event_type") === "error", lit(1)).otherwise(lit(0)).as("error_count"),
-      (col("value") * 100).cast("double").as("latency_ms"))
-    orderEvents.unionByName(sessionEvents).unionByName(requestEvents)
+    val t = col("event_type")
+    val isOrder = t === "purchase"
+    val isRequest = t.isin("click", "view", "error")
+    def flag(c: Column) = when(c, lit(1)).otherwise(lit(0))
+    Synth.eventTime(events)
+      .filter(t.isin("purchase", "signup", "click", "view", "error"))
+      .select(
+        col("ts").as("event_time"),
+        flag(t === "signup").as("active_session_count"),
+        when(isOrder, col("value").cast("double")).otherwise(lit(0.0)).as("revenue_amount"),
+        flag(isOrder).as("order_count"),
+        flag(isRequest).as("request_count"),
+        flag(t === "error").as("error_count"),
+        when(isRequest, (col("value") * 100).cast("double")).as("latency_ms"))
   }
 
   /** A1/A2/F3/P14: sliding-window KPI multi-agg with derived errorRate
@@ -108,20 +100,20 @@ object Frames {
         coalesce(col("latency_raw"), lit(0L)).cast("long").as("latency"))
 
   /** A3/P12/F3: keyed sliding-window agg with the least() intensity clamp
-    * (reference: region_aggregator.py:102-131). */
+    * (reference: region_aggregator.py:102-131). The reference unions
+    * orders and requests from two topics; here one event stream feeds one
+    * filter plus one projection, with the region computed once (a union
+    * would scan each micro-batch once per arm). The DuckDB oracle keeps the
+    * two-arm `UNION ALL` as the independent reference. */
   def regionFrame(events: DataFrame): DataFrame = {
-    val e = Synth.eventTime(events)
-    val orderEvents = e.filter(col("event_type") === "purchase").select(
-      col("ts").as("event_time"),
-      coalesce(Synth.regionName(col("user_id")), lit("Unknown")).as("region_name"),
-      col("value").cast("double").as("sales"),
-      lit(0).as("request_count"))
-    val requestEvents = e.filter(col("event_type").isin("click", "view", "error")).select(
-      col("ts").as("event_time"),
-      coalesce(Synth.regionName(col("user_id")), lit("Unknown")).as("region_name"),
-      lit(0.0).as("sales"),
-      lit(1).as("request_count"))
-    orderEvents.unionByName(requestEvents)
+    val isOrder = col("event_type") === "purchase"
+    Synth.eventTime(events)
+      .filter(col("event_type").isin("purchase", "click", "view", "error"))
+      .select(
+        col("ts").as("event_time"),
+        coalesce(Synth.regionName(col("user_id")), lit("Unknown")).as("region_name"),
+        when(isOrder, col("value").cast("double")).otherwise(lit(0.0)).as("sales"),
+        when(isOrder, lit(0)).otherwise(lit(1)).as("request_count"))
       .withWatermark("event_time", WatermarkDelay)
       .groupBy(window(col("event_time"), Regions._1, Regions._2), col("region_name"))
       .agg(round(sum("sales"), 2).as("sales"),
@@ -174,20 +166,6 @@ object Frames {
         when(col("total_nodes") > 0, lit(100.0)).otherwise(lit(0.0)).as("apiClusterScore"),
         when(col("total_nodes") > 0, lit("HEALTHY")).otherwise(lit("DOWN")).as("apiClusterStatus"),
         epochMs(col("window.end")).as("updatedAt"))
-
-  /** A6: the streaming-shaped HLL variant (`approx_count_distinct`), kept as
-    * its own query builder: the raw estimate can't hash-match an exact
-    * oracle, so this form is spec-bounded (FramesSpec) and used by the
-    * streaming jobs.
-    */
-  def approxDistinctFrame(events: DataFrame): DataFrame =
-    Synth.eventTime(events)
-      .withWatermark("ts", WatermarkDelay)
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(approx_count_distinct("user_id").as("approx_users"),
-        count(lit(1)).as("n_events"))
-      .select(epochMs(col("window.end")).as("updatedAt"),
-        col("approx_users"), col("n_events"))
 
   /** A6, oracle-checkable form: computes the builtin HLL estimate AND the
     * exact distinct count in the same plan, and emits the exact count plus a
@@ -288,10 +266,14 @@ object Frames {
     * micro-batch (reference: kpi_aggregator.py:60-67), as a plan-level
     * TakeOrderedAndProject instead of a driver-side collect.
     */
-  def top1RichestWindow(events: DataFrame): DataFrame =
-    kpiFrame(events)
-      .orderBy((col("activeUsers") + col("orders") + col("latency")).desc,
-        col("updatedAt").desc)
+  def top1RichestWindow(events: DataFrame): DataFrame = richestWindow(kpiFrame(events))
+
+  /** The A9/T1 selection rule over KPI rows: most activeUsers + orders +
+    * latency first, the latest window on ties, one row. Shared by
+    * [[top1RichestWindow]] and `KvSink.kpiWriter`. */
+  def richestWindow(kpis: DataFrame): DataFrame =
+    kpis.orderBy((col("activeUsers") + col("orders") + col("latency")).desc,
+      col("updatedAt").desc)
       .limit(1)
 
   /** Streaming exact dedup: drop duplicate event_ids with bounded state —
@@ -308,14 +290,17 @@ object Frames {
 
   /** T3: keep only the rows of the latest window (reference:
     * region_aggregator.py:32-38 does this driver-side over collected rows).
-    * Expressed as a broadcast max-join so no single-task funnel exists.
     */
-  def latestWindow(events: DataFrame): DataFrame = {
-    val regions = regionFrame(events)
+  def latestWindow(events: DataFrame): DataFrame =
+    latestRows(regionFrame(events)).orderBy(col("region_name"))
+
+  /** The T3 selection rule over region rows: the rows whose `updatedAt` is
+    * the maximum, as a broadcast max-join so no single-task funnel exists.
+    * Shared by [[latestWindow]] and `KvSink.regionsWriter`. */
+  def latestRows(regions: DataFrame): DataFrame = {
     val maxEnd = regions.agg(max(col("updatedAt")).as("max_updated"))
     regions.join(broadcast(maxEnd), col("updatedAt") === col("max_updated"))
-      .select("updatedAt", "region_name", "sales", "intensity")
-      .orderBy(col("region_name"))
+      .drop("max_updated")
   }
 
   // ---------------------------------------------------------------- registry

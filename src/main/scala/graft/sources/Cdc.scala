@@ -305,8 +305,8 @@ object Cdc {
         .select(col("event_id"), col("payload"))
         .orderBy("event_id")
     }),
-    // P6/U1: the 3-way lit/null-pad normalization union, row-level
-    // (the aggregated form is Frames.kpiFrame).
+    // P6/U1: the orders/sessions/requests normalization, row-level (the
+    // aggregated form is Frames.kpiFrame); its oracle is the 3-way union.
     "kpi_union" -> ((s, d) => graft.ops.Frames.kpiNormalize(Tables.events(s, d))
       .select(unix_micros(col("event_time")).as("event_time_us"),
         col("active_session_count"), col("revenue_amount"), col("order_count"),

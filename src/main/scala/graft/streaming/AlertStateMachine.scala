@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** W4: the stateful alert machine — Normal → Pending → Firing after N=3
   * consecutive breaches, with recovery resetting to Normal.
@@ -56,7 +56,4 @@ object AlertStateMachine {
     evals.groupByKey(_.ruleId)
       .mapGroupsWithState[AlertState, AlertStatus](GroupStateTimeout.NoTimeout)(updateGroup)
   }
-
-  /** The output mode this machine requires when streamed. */
-  val outputMode: OutputMode = OutputMode.Update()
 }

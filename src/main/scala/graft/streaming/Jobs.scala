@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   *
   * W2 discipline: `source()` is called once per query so no two queries
   * share a plan node (sharing trips `Redefining watermark` once each query
-  * applies its own watermark after union).
+  * applies its own watermark).
   */
 object Jobs {
 
@@ -20,7 +20,7 @@ object Jobs {
   val WatermarkedModes = Map(
     "kpi" -> "update", "activity" -> "append", "regions" -> "complete",
     "traffic" -> "complete", "health" -> "complete", "geo" -> "complete",
-    "platform" -> "complete", "alerts" -> "update")
+    "platform" -> "complete", "alerts" -> "update", "kpi-relay" -> "update")
 
   /** The events schema for streaming file sources (explicit — never inferred
     * in the hot path, reference: schemas.py:23-170 discipline). */
@@ -49,16 +49,47 @@ object Jobs {
       .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .parquet(dir)
 
-  private def start(frame: DataFrame, name: String, mode: String,
+  /** The one wiring every query starts through: output mode by query name
+    * from [[WatermarkedModes]], a `foreachBatch` writer, and a checkpoint
+    * directory named after the query. */
+  private def start(frame: DataFrame, name: String,
       checkpointBase: String, writer: (DataFrame, Long) => Unit,
-      trigger: Trigger): StreamingQuery =
+      trigger: Trigger): StreamingQuery = {
+    val checkpoint = s"$checkpointBase/$name"
+    collapseRepeatedSource(frame, checkpoint)
     frame.writeStream
-      .outputMode(mode)
+      .outputMode(WatermarkedModes(name))
       .foreachBatch { (df: DataFrame, id: Long) => writer(df, id) }
-      .option("checkpointLocation", s"$checkpointBase/$name")
+      .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .queryName(name)
       .start()
+  }
+
+  /** Checkpoint upgrade for the one-pass frames. While `Frames.kpiNormalize`
+    * and `regionFrame` unioned filtered arms of their one stream, each
+    * offsets entry of kpi, kpi-relay and regions listed that stream once per
+    * arm (3, 3 and 2 identical lines), and Spark refuses to resume when the
+    * source count changes. For a query that now reads one source, such an
+    * entry is rewritten with one line; a query reading several sources (the
+    * alerts job's per-rule streams) is left alone. */
+  private def collapseRepeatedSource(frame: DataFrame, checkpoint: String): Unit =
+    if (frame.queryExecution.analyzed.collectLeaves().count(_.isStreaming) == 1) {
+      val offsets = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
+      val fs = offsets.getFileSystem(frame.sparkSession.sparkContext.hadoopConfiguration)
+      if (fs.exists(offsets))
+        fs.listStatus(offsets).map(_.getPath).filter(_.getName.forall(_.isDigit)).foreach { f =>
+          val in = fs.open(f)
+          val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+            finally in.close()
+          val entries = lines.drop(2)
+          if (entries.length > 1 && entries.distinct.length == 1) {
+            val out = fs.create(f, true)
+            try out.write((lines.take(2) :+ entries.head).mkString("\n").getBytes("UTF-8"))
+            finally out.close()
+          }
+        }
+    }
 
   /** Transactions job: KPI (update) + activity (append) + regions (complete),
     * one fresh source per query (W2). `trigger` defaults to the reference's
@@ -68,11 +99,11 @@ object Jobs {
       checkpointBase: String,
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): Seq[StreamingQuery] = Seq(
     start(graft.ops.Frames.kpiFrame(source()), "kpi",
-      WatermarkedModes("kpi"), checkpointBase, KvSink.kpiWriter(kv), trigger),
+      checkpointBase, KvSink.kpiWriter(kv), trigger),
     start(graft.ops.Activity.activityFeed(source()), "activity",
-      WatermarkedModes("activity"), checkpointBase, KvSink.activityWriter(kv), trigger),
+      checkpointBase, KvSink.activityWriter(kv), trigger),
     start(graft.ops.Frames.regionFrame(source()), "regions",
-      WatermarkedModes("regions"), checkpointBase, KvSink.regionsWriter(kv), trigger))
+      checkpointBase, KvSink.regionsWriter(kv), trigger))
 
   /** Infrastructure job: traffic (complete) + health (complete) + geo
     * (complete) — the reference's three infra queries
@@ -82,11 +113,11 @@ object Jobs {
       checkpointBase: String,
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): Seq[StreamingQuery] = Seq(
     start(graft.ops.Frames.trafficFrame(source()), "traffic",
-      WatermarkedModes("traffic"), checkpointBase, KvSink.trafficWriter(kv), trigger),
+      checkpointBase, KvSink.trafficWriter(kv), trigger),
     start(graft.ops.Frames.healthFrame(source(), exactDistinct = false), "health",
-      WatermarkedModes("health"), checkpointBase, KvSink.healthWriter(kv), trigger),
+      checkpointBase, KvSink.healthWriter(kv), trigger),
     start(graft.ops.Frames.geoFrame(source()), "geo",
-      WatermarkedModes("geo"), checkpointBase, KvSink.geoWriter(kv), trigger))
+      checkpointBase, KvSink.geoWriter(kv), trigger))
 
   /** Derived alerts job: consume a KPI snapshot stream (in production the
     * `aggregated.kpis` read-back via [[KafkaStack.jsonStream]] — the
@@ -113,39 +144,8 @@ object Jobs {
         col("updatedAt").cast("long").as("updatedAt"))
     }.reduce(_ unionByName _)
       .as[AlertStateMachine.AlertEval]
-    AlertStateMachine(evals)
-      .toDF()
-      .writeStream
-      .outputMode(AlertStateMachine.outputMode)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val rows = df.collect()
-        if (rows.nonEmpty) {
-          val payload = rows.sortBy(r => (r.getAs[String]("ruleId")))
-            .map(r => s"""{"id":"${r.getAs[String]("ruleId")}","status":"${r.getAs[String]("status")}","consecutive":${r.getAs[Int]("consecutive")},"updatedAt":${r.getAs[Long]("updatedAt")}}""")
-          kv.writeJson(Keys.AlertRules, payload.mkString("[", ",", "]"),
-            channel = Some(Keys.ChannelAlerts))
-          // Reference-shaped summary (alert_evaluator.py:28-36) — the same
-          // schema KvSink.alertWriter writes to this key, so readers via
-          // Serve.getAlertSummary see one contract regardless of which
-          // writer ran last. Severity comes from the rule config by ruleId;
-          // healthy is the machine's quiescent state only (its "normal"
-          // plays the reference's status == 'ok').
-          val sevById = graft.ops.Alerts.rules.map(r => r.id -> r.severity).toMap
-          val unhealthy = rows.filter(_.getAs[String]("status") != "normal")
-          def bySev(s: String) = unhealthy.count(r =>
-            sevById.getOrElse(r.getAs[String]("ruleId"), "warning") == s)
-          kv.writeHash(Keys.AlertSummary, Map(
-            "criticalCount" -> bySev("critical").toString,
-            "warningCount" -> bySev("warning").toString,
-            "healthyCount" -> rows.count(_.getAs[String]("status") == "normal").toString,
-            "criticalImpact" -> "Currently affecting 0% of users",
-            "updatedAt" -> rows.map(_.getAs[Long]("updatedAt")).max.toString))
-        }
-      }
-      .option("checkpointLocation", s"$checkpointBase/alerts")
-      .trigger(trigger)
-      .queryName("alerts")
-      .start()
+    start(AlertStateMachine(evals).toDF(), "alerts", checkpointBase,
+      KvSink.alertWriter(kv), trigger)
   }
 
   /** Schema of the derived KPI row stream [[alertsJob]] consumes
@@ -168,21 +168,15 @@ object Jobs {
   def kpiRelayJob(source: () => DataFrame, derivedDir: String,
       checkpointBase: String,
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): StreamingQuery =
-    graft.ops.Frames.kpiFrame(source()).writeStream
-      .outputMode("update")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.select("errorRate", "latency", "updatedAt")
-          .write.mode("append").parquet(derivedDir)
-      }
-      .option("checkpointLocation", s"$checkpointBase/kpi-relay")
-      .trigger(trigger)
-      .queryName("kpi-relay")
-      .start()
+    start(graft.ops.Frames.kpiFrame(source()), "kpi-relay", checkpointBase,
+      (df, _) => df.select("errorRate", "latency", "updatedAt")
+        .write.mode("append").parquet(derivedDir),
+      trigger)
 
   /** Derived job: platform breakdown (complete, unwindowed running agg). */
   def derivedJob(source: () => DataFrame, kv: KvStore,
       checkpointBase: String,
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): Seq[StreamingQuery] = Seq(
     start(graft.ops.Frames.platformFrame(source()), "platform",
-      WatermarkedModes("platform"), checkpointBase, KvSink.platformWriter(kv), trigger))
+      checkpointBase, KvSink.platformWriter(kv), trigger))
 }

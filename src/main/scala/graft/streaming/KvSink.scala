@@ -135,10 +135,7 @@ object KvSink {
     * from the previous hour's snapshot (reference: kpi_aggregator.py:54-96).
     */
   def kpiWriter(kv: KvStore): (DataFrame, Long) => Unit = (batch, _) => {
-    val rows = batch
-      .orderBy((col("activeUsers") + col("orders") + col("latency")).desc,
-        col("updatedAt").desc)
-      .limit(1).collect()
+    val rows = graft.ops.Frames.richestWindow(batch).collect()
     rows.headOption.foreach { row =>
       val current = Map(
         "activeUsers" -> row.getAs[Long]("activeUsers").toString,
@@ -214,21 +211,28 @@ object KvSink {
         channel = Some(Keys.ChannelPlatform))
   }
 
-  /** A10: alert rules + summary writer (reference: alert_evaluator.py:21-38). */
+  /** A10/W4: alert rules + summary writer over the state machine's rows
+    * (ruleId, status, consecutive, updatedAt) — rules as a JSON array, the
+    * summary in the reference's hash shape (reference:
+    * alert_evaluator.py:21-38). Severity comes from the rule config by
+    * ruleId; healthy is the machine's quiescent state only (its "normal"
+    * plays the reference's status == 'ok').
+    */
   def alertWriter(kv: KvStore): (DataFrame, Long) => Unit = (batch, _) => {
     val rows = batch.collect()
     if (rows.nonEmpty) {
-      kv.writeJson(Keys.AlertRules, rows.map(rowJson).mkString("[", ",", "]"),
+      val payload = rows.sortBy(r => (r.getAs[String]("ruleId")))
+        .map(r => s"""{"id":"${r.getAs[String]("ruleId")}","status":"${r.getAs[String]("status")}","consecutive":${r.getAs[Int]("consecutive")},"updatedAt":${r.getAs[Long]("updatedAt")}}""")
+      kv.writeJson(Keys.AlertRules, payload.mkString("[", ",", "]"),
         channel = Some(Keys.ChannelAlerts))
-      val critical = rows.count(r =>
-        r.getAs[String]("severity") == "critical" && r.getAs[String]("status") != "ok")
-      val warning = rows.count(r =>
-        r.getAs[String]("severity") == "warning" && r.getAs[String]("status") != "ok")
-      val healthy = rows.count(r => r.getAs[String]("status") == "ok")
+      val sevById = graft.ops.Alerts.rules.map(r => r.id -> r.severity).toMap
+      val unhealthy = rows.filter(_.getAs[String]("status") != "normal")
+      def bySev(s: String) = unhealthy.count(r =>
+        sevById.getOrElse(r.getAs[String]("ruleId"), "warning") == s)
       kv.writeHash(Keys.AlertSummary, Map(
-        "criticalCount" -> critical.toString,
-        "warningCount" -> warning.toString,
-        "healthyCount" -> healthy.toString,
+        "criticalCount" -> bySev("critical").toString,
+        "warningCount" -> bySev("warning").toString,
+        "healthyCount" -> rows.count(_.getAs[String]("status") == "normal").toString,
         "criticalImpact" -> "Currently affecting 0% of users",
         "updatedAt" -> rows.map(_.getAs[Long]("updatedAt")).max.toString))
     }
@@ -251,16 +255,13 @@ object KvSink {
 
   /** Regions writer: latest-window snapshot (name-sorted) + flow arcs
     * (reference: region_aggregator.py:27-65). The latest-window filter runs
-    * IN-PLAN (broadcast max-join, same shape as `Frames.latestWindow`)
+    * IN-PLAN (`Frames.latestRows`, the rule `Frames.latestWindow` uses)
     * before the collect: complete mode re-emits every window ever, so a
     * driver-side filter over `batch.collect()` would grow without bound
     * with stream lifetime — the collect must only ever see O(regions) rows.
     */
   def regionsWriter(kv: KvStore): (DataFrame, Long) => Unit = (batch, _) => {
-    val maxEnd = batch.agg(max(col("updatedAt")).as("max_updated"))
-    val current = batch
-      .join(broadcast(maxEnd), col("updatedAt") === col("max_updated"))
-      .collect()
+    val current = graft.ops.Frames.latestRows(batch).collect()
     if (current.nonEmpty) {
       val payload = current.sortBy(_.getAs[String]("region_name"))
         .map(r => s"""{"name":"${r.getAs[String]("region_name")}","intensity":${r.getAs[Double]("intensity")},"sales":${r.getAs[Double]("sales")}}""")

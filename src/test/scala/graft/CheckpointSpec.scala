@@ -57,6 +57,37 @@ class CheckpointSpec extends SparkSpec {
     assert(Serve.parseNumber("HEALTHY") == "HEALTHY")
   }
 
+  test("a kpi checkpoint that lists its one stream once per union arm resumes with its state") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val in = Files.createTempDirectory("graft-arms-in").toString
+    val ckpt = Files.createTempDirectory("graft-arms-ckpt").toString
+    val kv = new InMemoryKvStore
+    writeBatch(in, Seq(
+      (0L, "2024-01-01 00:01:00", 1L, "purchase", 10.0, "{}"),
+      (1L, "2024-01-01 00:03:00", 2L, "click", 2.0, "{}")), "a")
+    // Run 1 in the union shape: two filtered arms of one stream, so every
+    // offsets entry lists that stream twice.
+    val events = Jobs.fileEventStream(spark, in)
+    val purchase = col("event_type") === "purchase"
+    val run1 = graft.ops.Frames.kpiFrame(events.filter(purchase).unionByName(events.filter(!purchase)))
+      .writeStream.outputMode("update")
+      .foreachBatch { (df: DataFrame, id: Long) => graft.streaming.KvSink.kpiWriter(kv)(df, id) }
+      .option("checkpointLocation", s"$ckpt/kpi")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try run1.awaitTermination(60000) finally if (run1.isActive) run1.stop()
+
+    writeBatch(in, Seq((2L, "2024-01-01 00:05:00", 3L, "purchase", 5.0, "{}")), "b")
+    val run2 = Jobs.transactionsJob(
+      () => Jobs.fileEventStream(spark, in), kv, ckpt, Trigger.AvailableNow())
+    try run2.foreach(_.awaitTermination(60000))
+    finally run2.foreach(q => if (q.isActive) q.stop())
+    val kpi = run2.find(_.name == "kpi").get
+    assert(kpi.recentProgress.map(_.numInputRows).sum == 1) // only the new event
+    assert(Serve.getMetrics(kv)("orders") == 2L) // run 1's purchase came from state
+  }
+
   test("parquet file sink is exactly-once across a checkpointed restart") {
     val in = Files.createTempDirectory("graft-fsink-in").toString
     val out = Files.createTempDirectory("graft-fsink-out").toString

@@ -63,6 +63,10 @@ class DataflowParitySpec extends SparkSpec {
       spark.streams.awaitAnyTermination(120000)
       stage1.foreach(_.awaitTermination(120000))
     } finally stage1.foreach(q => if (q.isActive) q.stop())
+    // Each event query reads the 32 events once: a frame that scanned its
+    // micro-batch once per union arm would report a multiple of 32.
+    val inputRows = stage1.map(q => q.name -> q.recentProgress.map(_.numInputRows).sum).toMap
+    assert(inputRows.size == 8 && inputRows.values.forall(_ == 32), inputRows)
     // Alerts consume the relayed derived-KPI stream (the reference's
     // `aggregated.kpis` read-back) once the relay has materialized it.
     val alerts = Jobs.alertsJob(
