@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
@@ -62,6 +63,10 @@ object Bench {
 
     var times = Vector.empty[(String, Double)]
     var shuffles = Vector.empty[(String, Long)]
+    // Classes Janino compiled while the query's two timed runs ran: a
+    // query that keeps compiling after its first run has lost the codegen
+    // cache (see the cache settings in [[Session]]).
+    var compiles = Vector.empty[(String, Long)]
     var errors = Vector.empty[(String, String)]
     // Optional args = query-name filter (iterate on one hotspot without
     // paying for the full suite); no args = the full driver-run suite.
@@ -73,6 +78,7 @@ object Bench {
       // 2-4× with ambient load; the min is the standard noise-robust
       // estimator and both runs do full work (cache cleared between, noop
       // write materializes every output column).
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val runs = (0 until 2).flatMap { _ =>
         // Evict any persist()ed intermediates before starting the clock:
         // leaked caches both skew the time and accumulate memory pressure
@@ -94,6 +100,7 @@ object Bench {
         Thread.sleep(100) // let async stage-completion events settle
         val sb = shuffleBytes.getAndSet(0L)
         shuffles :+= name -> sb / 2 // two timed runs → per-run bytes
+        compiles :+= name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0)
       }
     }
     // Contention guard (the round-9 lesson: a shared host inflated the ANN
@@ -147,11 +154,12 @@ object Bench {
 
     val qs = times.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val sh = shuffles.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val cc = compiles.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = times.map(_._2).sum
     val reruns = rerun.map(jstr).mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"shuffle_bytes":$sh,"errors":$errs,"loadavg":$loadavg,"loadavg_start":$loadStart,"canonical":$canonical,"git_sha":${jstr(gitSha)},"cpus":$cpus,"contention_reruns":$reruns,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"shuffle_bytes":$sh,"codegen_compiles":$cc,"errors":$errs,"loadavg":$loadavg,"loadavg_start":$loadStart,"canonical":$canonical,"git_sha":${jstr(gitSha)},"cpus":$cpus,"contention_reruns":$reruns,"sf":${jstr(sfDir)}}"""
     println(line)
     // Persist the FULL line to a stable file as well: the driver's capture
     // truncates stdout tails, which once left per-query numbers without

@@ -28,6 +28,23 @@ import org.apache.spark.sql.SparkSession
   *     already holds each file's status. The master is always
   *     `local[cores]`, so the listing job ran on this JVM anyway; on a
   *     cluster whose sources list thousands of directories, lower it.
+  *   - `artifact.isolation.enabled` is `false`: generated classes are
+  *     cached per (class loader, code). With isolation on, every session
+  *     gets its own artifact UUID, every `StreamingQuery.start` clones the
+  *     session, and each UUID gets a fresh class loader, so each query
+  *     start recompiled all of its classes: a drain of the nine-query
+  *     stream graph compiled 154-163 classes every time, the same 73
+  *     bodies on every repetition. Isolation serves only Spark Connect
+  *     clients and per-session `addArtifact` jars, which nothing here
+  *     uses; turn it back on if the engine ever serves either.
+  *   - `codegen.cache.maxEntries` is 1000: the default of 100 is smaller
+  *     than one pass over the registry (about 186 distinct classes,
+  *     `dedup_apply` alone 92) or the stream graph (about 120), and a
+  *     list walked in a cycle through a too-small LRU cache misses on
+  *     every entry: each registry pass compiled 184-192 classes. With
+  *     isolation off alone a drain still compiled about 81; with both
+  *     settings a repeated drain or pass compiles none. Revisit the size
+  *     if the registry grows past it.
   */
 object Session {
 
@@ -64,6 +81,8 @@ object Session {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         Int.MaxValue.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
   def local(appName: String): SparkSession = {

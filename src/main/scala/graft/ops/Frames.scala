@@ -295,13 +295,19 @@ object Frames {
     latestRows(regionFrame(events)).orderBy(col("region_name"))
 
   /** The T3 selection rule over region rows: the rows whose `updatedAt` is
-    * the maximum, as a broadcast max-join so no single-task funnel exists.
-    * Shared by [[latestWindow]] and `KvSink.regionsWriter`. */
-  def latestRows(regions: DataFrame): DataFrame = {
-    val maxEnd = regions.agg(max(col("updatedAt")).as("max_updated"))
-    regions.join(broadcast(maxEnd), col("updatedAt") === col("max_updated"))
-      .drop("max_updated")
-  }
+    * the maximum, in one pass over `regions`. Each window's rows are
+    * gathered per `updatedAt` (a keyed shuffle, so no single-task funnel),
+    * the newest window's list is kept by a global `max_by` over O(windows)
+    * partial rows, and exploded back to its O(regions) rows. A max-join
+    * would evaluate `regions` twice: for a stream writer that runs the
+    * state store twice per batch. Shared by [[latestWindow]] and
+    * `KvSink.regionsWriter`. */
+  def latestRows(regions: DataFrame): DataFrame =
+    regions.groupBy(col("updatedAt"))
+      .agg(collect_list(struct(regions.columns.map(col): _*)).as("rows"))
+      .agg(max_by(col("rows"), col("updatedAt")).as("rows"))
+      .select(explode(col("rows")).as("row"))
+      .select(col("row.*"))
 
   // ---------------------------------------------------------------- registry
 

@@ -173,6 +173,26 @@ object Jobs {
         .write.mode("append").parquet(derivedDir),
       trigger)
 
+  /** The whole stream graph [[StreamMain]] runs: the nine queries of the
+    * transactions, infrastructure and derived jobs plus the KPI relay and
+    * the alerts job it feeds, all reading parquet event files from
+    * `inputDir`, with checkpoints under `checkpointBase`. The alerts job
+    * consumes the derived KPI stream (reference: the `aggregated.kpis`
+    * topic), rendered as the relay's drop-dir `checkpointBase/derived-kpis`. */
+  def graph(spark: SparkSession, inputDir: String, kv: KvStore,
+      checkpointBase: String,
+      trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): Seq[StreamingQuery] = {
+    val source = () => fileEventStream(spark, inputDir)
+    val derivedDir = s"$checkpointBase/derived-kpis"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(derivedDir))
+    transactionsJob(source, kv, checkpointBase, trigger) ++
+      infrastructureJob(source, kv, checkpointBase, trigger) ++
+      derivedJob(source, kv, checkpointBase, trigger) ++
+      Seq(
+        kpiRelayJob(source, derivedDir, checkpointBase, trigger),
+        alertsJob(() => fileKpiStream(spark, derivedDir), kv, checkpointBase, trigger))
+  }
+
   /** Derived job: platform breakdown (complete, unwindowed running agg). */
   def derivedJob(source: () => DataFrame, kv: KvStore,
       checkpointBase: String,

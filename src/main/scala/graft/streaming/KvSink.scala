@@ -254,6 +254,8 @@ object KvSink {
     }
 
   /** Regions writer: latest-window snapshot (name-sorted) + flow arcs
+    * ranked by intensity, ties by region name, so the published arcs depend
+    * on the rows alone, not on their collect order
     * (reference: region_aggregator.py:27-65). The latest-window filter runs
     * IN-PLAN (`Frames.latestRows`, the rule `Frames.latestWindow` uses)
     * before the collect: complete mode re-emits every window ever, so a
@@ -269,7 +271,7 @@ object KvSink {
         channel = Some(Keys.ChannelRegions))
       val ranked = current
         .map(r => (r.getAs[String]("region_name"), r.getAs[Double]("intensity")))
-        .sortBy(-_._2).toSeq
+        .sortBy { case (name, intensity) => (-intensity, name) }.toSeq
       flowsPayload(ranked).foreach(
         kv.writeJson(Keys.FlowsCurrent, _, channel = Some(Keys.ChannelFlows)))
     }

@@ -32,18 +32,7 @@ object StreamMain {
       val ws = WsPush.start(kv, p.toInt)
       System.err.println(s"[graft] WebSocket push on :${ws.port}")
     }
-    val source = () => Jobs.fileEventStream(spark, inputDir)
-    // The alerts graph consumes the derived KPI stream (reference:
-    // `aggregated.kpis` topic), rendered here as a relay drop-dir.
-    val derivedDir = s"$ckpt/derived-kpis"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(derivedDir))
-    val queries =
-      Jobs.transactionsJob(source, kv, ckpt) ++
-      Jobs.infrastructureJob(source, kv, ckpt) ++
-      Jobs.derivedJob(source, kv, ckpt) ++
-      Seq(
-        Jobs.kpiRelayJob(source, derivedDir, ckpt),
-        Jobs.alertsJob(() => Jobs.fileKpiStream(spark, derivedDir), kv, ckpt))
+    val queries = Jobs.graph(spark, inputDir, kv, ckpt)
     sys.addShutdownHook(queries.foreach(q => if (q.isActive) q.stop()))
     spark.streams.awaitAnyTermination()
   }

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.metrics.source.HiveCatalogMetrics
+import org.apache.spark.metrics.source.{CodegenMetrics, HiveCatalogMetrics}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.Trigger
 
@@ -105,6 +105,19 @@ class JobsSpec extends SparkSpec {
     assert(kv.strings(Keys.AlertRules).contains("\"id\":\"alert_1\""))
   }
 
+  test("the stream graph starts the nine StreamMain queries, each on its own checkpoint") {
+    val in = writeDropDir()
+    val ckpt = Files.createTempDirectory("graft-ckpt-graph").toString
+    val kv = new InMemoryKvStore
+    val queries = Jobs.graph(spark, in, kv, ckpt, Trigger.AvailableNow())
+    try {
+      queries.foreach(_.awaitTermination(60000))
+      assert(queries.map(_.name).sorted == Jobs.WatermarkedModes.keys.toSeq.sorted)
+      queries.foreach(q => assert(Files.isDirectory(Paths.get(ckpt, q.name, "offsets")), q.name))
+      assert(kv.strings.contains(Keys.RegionsCurrent))
+    } finally queries.foreach(q => if (q.isActive) q.stop())
+  }
+
   test("infrastructure + derived jobs populate health, traffic, platform") {
     val in = writeDropDir()
     val ckpt = Files.createTempDirectory("graft-ckpt2").toString
@@ -121,6 +134,38 @@ class JobsSpec extends SparkSpec {
       val platform = kv.strings("nexus:platform:breakdown")
       assert(platform.contains("\"name\"") && platform.contains("\"value\""))
     } finally queries.foreach(q => if (q.isActive) q.stop())
+  }
+
+  test("a restarted stream query compiles no class the JVM has already compiled") {
+    // Generated classes are cached per (class loader, code); each query
+    // start clones the session, and with per-session artifact isolation
+    // every clone brought a fresh class loader and a full recompile.
+    import spark.implicits._
+    val in = writeDropDir()
+    val ckpt = Files.createTempDirectory("graft-ckpt-restart").toString
+    val kv = new InMemoryKvStore
+    // Starts the queries from the checkpoints, drains and stops them: rows read.
+    def drain(): Long = {
+      val queries = Jobs.transactionsJob(
+        () => Jobs.fileEventStream(spark, in), kv, ckpt, Trigger.AvailableNow())
+      try queries.foreach(_.awaitTermination(60000))
+      finally queries.foreach(q => if (q.isActive) q.stop())
+      queries.flatMap(_.recentProgress).map(_.numInputRows).sum
+    }
+    // Adds one event file and drains again: rows read and classes compiled.
+    def restart(eventId: Long): (Long, Long) = {
+      Seq((eventId, Timestamp.valueOf("2024-01-01 00:05:00"), 6L, "purchase", 4.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("append").parquet(in)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val rows = drain()
+      (rows, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled)
+    }
+    assert(drain() > 0)
+    // The first restart may compile what only a resumed query runs (the
+    // row joiner that reads the KPI state back from its snapshot).
+    assert(restart(5L)._1 == 3) // the new event, once per query
+    assert(restart(6L) == (3L, 0L))
   }
 
   test("a micro-batch of more than 32 files lists them on the driver, not in a listing job") {

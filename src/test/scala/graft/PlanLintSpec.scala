@@ -84,6 +84,9 @@ class PlanLintSpec extends SparkSpec {
     "lsh_index_append" ->
       ("same signature reassembly (base + appended batch read from the " +
         "persisted sigs table), 12-bounded groups"),
+    "latest_window" ->
+      ("per-window region set: regionFrame groups by (window, region_name), " +
+        "so a group holds at most one row per region (9 names + Unknown)"),
   )
 
   /** Queries allowed a broadcast cross join whose build side is neither a

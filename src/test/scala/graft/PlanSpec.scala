@@ -122,6 +122,15 @@ class PlanSpec extends SparkSpec {
     assert(cols.contains("l_quantity") && cols.size <= 6, cols.toString)
   }
 
+  test("latest window scans and aggregates the events once") {
+    // the newest window is picked from the one windowed aggregation's
+    // output, not joined against a max taken from a second evaluation
+    val plan = SparkEntry.queries("latest_window")(spark, sf).queryExecution.sparkPlan
+    val scans = plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.length == 1, plan.toString.take(3000))
+    assert(!plan.toString.contains("Join"), plan.toString.take(3000))
+  }
+
   test("token packing window is sharded — no unpartitioned WindowExec") {
     val p = plan("token_packing")
     // every Window node must carry a partition spec (shard#...)

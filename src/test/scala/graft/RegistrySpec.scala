@@ -3,16 +3,32 @@ package graft
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
 
 import graft.streaming.KafkaStack
 
 /** S4 upgraded from code-only to exercised: the writer-schema fetch driven
   * against a local HTTP server speaking the Schema Registry wire shape
   * (`GET /subjects/{subject}/versions/latest` → `{"schema": "..."}`), with
-  * the JSON-escaped payload the real registry returns.
+  * the JSON-escaped payload the real registry returns; and the query
+  * registry's generated classes reused across passes.
   */
-class RegistrySpec extends AnyFunSuite {
+class RegistrySpec extends SparkSpec {
+
+  test("a second pass over dedup_apply and bpe_merges compiles nothing") {
+    // The two queries generate about 117 classes together, more than
+    // Spark's default codegen cache of 100 entries: a list walked in a
+    // cycle through a too-small LRU cache recompiles every class.
+    val sf = "/root/testdata/sf0.001"
+    def pass(): Unit = Seq("dedup_apply", "bpe_merges").foreach { q =>
+      SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache()
+    }
+    pass()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0)
+  }
 
   test("writer-schema fetch parses the registry response, unescaping JSON") {
     // the registry returns the Avro schema JSON-escaped inside a JSON field

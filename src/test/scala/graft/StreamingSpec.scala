@@ -1,13 +1,15 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.ops.Frames
-import graft.streaming.{AlertStateMachine, InMemoryKvStore, KvSink}
+import graft.streaming.{AlertStateMachine, InMemoryKvStore, Jobs, KvSink}
 import graft.streaming.AlertStateMachine.AlertEval
 
 /** Real Structured Streaming semantics (W1/W3/W4/W5): the same frame
@@ -235,6 +237,51 @@ class StreamingSpec extends SparkSpec {
     val flows = kv.strings("nexus:flows:current")
     assert(flows ==
       """[{"id":"flow_1","source":"Japan","target":"Brazil","value":35.0},{"id":"flow_2","source":"India","target":"Brazil","value":10.0}]""")
+  }
+
+  test("regions writer publishes the same flows whatever the order of tied rows") {
+    import spark.implicits._
+    val rows = Seq(
+      ("Chile", 4.0, 50.0, 2000L), ("Brazil", 3.0, 50.0, 2000L),
+      ("India", 2.0, 25.0, 2000L), ("Egypt", 1.0, 25.0, 2000L),
+      ("Japan", 5.0, 10.0, 2000L))
+    def flows(order: Seq[(String, Double, Double, Long)]): String = {
+      val kv = new InMemoryKvStore
+      KvSink.regionsWriter(kv)(
+        order.toDF("region_name", "sales", "intensity", "updatedAt").coalesce(1), 0L)
+      kv.strings("nexus:flows:current")
+    }
+    val forward = flows(rows)
+    assert(forward == flows(rows.reverse))
+    // ties rank by region name: Brazil is the hub, Egypt before India
+    assert(forward ==
+      """[{"id":"flow_1","source":"Chile","target":"Brazil","value":50.0},{"id":"flow_2","source":"Egypt","target":"Brazil","value":25.0},{"id":"flow_3","source":"India","target":"Brazil","value":25.0},{"id":"flow_4","source":"Japan","target":"Brazil","value":10.0}]""")
+  }
+
+  test("regions writer runs the state store once per micro-batch") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft-regions-in").toString
+    (0 until 3).foreach { f =>
+      (0 until 40).map(i => (f * 40L + i, ts(f"2024-01-01 ${f}%02d:${i}%02d:00"),
+        i % 7L, if (i % 3 == 0) "purchase" else "view", i.toDouble, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("append").parquet(in)
+    }
+    // summed state rows over the drain, the batch consumed by `consume`
+    def stateRows(consume: (DataFrame, Long) => Unit): Long = {
+      val ckpt = Files.createTempDirectory("graft-regions-ckpt").toString
+      val q = Frames.regionFrame(Jobs.fileEventStream(spark, in))
+        .writeStream.outputMode(OutputMode.Complete())
+        .foreachBatch { (df: DataFrame, id: Long) => consume(df, id) }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination(60000) finally if (q.isActive) q.stop()
+      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal).sum
+    }
+    val counted = stateRows((df, _) => { df.count(); () })
+    assert(counted > 0)
+    assert(stateRows(KvSink.regionsWriter(new InMemoryKvStore)) == counted)
   }
 
   test("activity writer pushes top-15 newest, newest at list head") {
