@@ -28,7 +28,7 @@ object Bench {
     // record run discipline — 1-min AND 5-min loadavg below ~2 — becomes
     // a flag the artifact carries, so bench_compare can refuse REGRESSED
     // verdicts from a run that was never comparable to begin with.
-    // [[Canonical]] — the gate shared with ScaleSmoke.
+    // [[Canonical]] — the gate shared with perfbench.
     val loadavgStart = Canonical.readLoadavg()
     val canonical = Canonical.isCanonical(loadavgStart)
     // SHA captured BEFORE the run: the measured classes were compiled from

@@ -1,9 +1,9 @@
 package graft
 
 /** THE canonicality rule, in one place for every measurement harness
-  * (Bench, ScaleSmoke): a run's numbers are citable
-  * round-over-round only when the host was idle when its clock started —
-  * 1-minute AND 5-minute loadavg below the gate
+  * (Bench; perfbench reuses its load and git-SHA readers): a run's
+  * numbers are citable round-over-round only when the host was idle
+  * when its clock started — 1-minute AND 5-minute loadavg below the gate
   * (`SPARK_GRAFT_CANONICAL_LOAD`, default 2.0). Unmeasurable load (no
   * /proc/loadavg) stays TRUSTING: inability to measure is not evidence
   * of contention, and stamping false would permanently disable the

@@ -79,19 +79,12 @@ object Corpus {
     * map-side-combinable pair count. No collect, no windows, no
     * broadcast of anything data-sized.
     */
-  /** [[Par.fan]]: spread documents over the session's cores before the
-    * md5-per-shingle explode — guarded on the input's scan parallelism
-    * (no added Exchange on a wide production scan; fixes only the
-    * single-file fixture pathology). */
-  private def fan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Par.fan(df)
-
   def sourceOverlap(documents: DataFrame): DataFrame = {
     // The shingled source set feeds three plan arms (sizes + both sides
     // of the self-join) — persist so the explode+distinct pass runs once
     // (profiled: the unpersisted form re-ran the ~2 s shingle stage per
     // arm at sf0.1). Same pattern as Curation.docShingles.
-    val s = shingleSet(fan(documents)).select(col("source"), col("sh")).distinct()
+    val s = shingleSet(Par.fan(documents)).select(col("source"), col("sh")).distinct()
       .transform(Par.stage) // eager: concurrent arms race a lazy cache
     val sizes = s.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val shared = s.as("a")
@@ -144,7 +137,7 @@ object Corpus {
     // candidate sides, both replay sides) — persist so the
     // explode+distinct runs once, not per arm (profiled: two identical
     // ~2.2 s single-file shingle stages at sf0.1 before the persist).
-    val sh = shingleSet(fan(documents)).select(col("doc_id"), col("sh"))
+    val sh = shingleSet(Par.fan(documents)).select(col("doc_id"), col("sh"))
       .transform(Par.stage) // eager: concurrent arms race a lazy cache
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
       .filter(col("n_sh") >= ContainMinShingles)
@@ -194,7 +187,7 @@ object Corpus {
   def containmentTopN(documents: DataFrame,
       topN: Int = ContainTopN): DataFrame = {
     // Same rationale as [[containmentPairs]] (eager, race-free).
-    val sh = shingleSet(fan(documents)).select(col("doc_id"), col("sh"))
+    val sh = shingleSet(Par.fan(documents)).select(col("doc_id"), col("sh"))
       .transform(Par.stage)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
       .filter(col("n_sh") >= ContainMinShingles)

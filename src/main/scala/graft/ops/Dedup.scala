@@ -27,14 +27,6 @@ object Dedup {
   /** 60-bit integer from an md5 hex prefix — the shared hash family. */
   private[ops] val md5i = "cast(conv(substring(md5(%s), 1, 15), 16, 10) as bigint)"
 
-  /** [[Par.fan]]: spread the corpus over the session's cores before the
-    * CPU-heavy tokenize/explode passes — guarded on the input's scan
-    * parallelism, so it is a no-op (no added Exchange) on a wide
-    * production scan and only fixes the single-file fixture pathology.
-    * Batch entry points only: the streaming micro-batch sketch path
-    * keeps its arrival partitioning. */
-  private def fan(df: DataFrame): DataFrame = Par.fan(df)
-
   /** Exact-dup corpus: planted exact duplicates (case-folded) 1-in-20. */
   def exactCorpus(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), col("text"))
@@ -164,7 +156,7 @@ object Dedup {
     * alert_rules pattern). At cluster scale this is the sketch table you
     * would checkpoint/bucket to storage between stages. */
   private def stagedSigs(corpus: DataFrame): DataFrame =
-    minhashSignatures(fan(corpus)).select("doc_id", "sig").transform(Par.stage)
+    minhashSignatures(Par.fan(corpus)).select("doc_id", "sig").transform(Par.stage)
 
   /** Pairs-only candidate path for consumers that never read
     * `est_jaccard` ([[dupClusters]], [[dedupApply]],
@@ -246,7 +238,7 @@ object Dedup {
     * duplicates against the standing corpus.
     */
   def minhashIncremental(corpus: DataFrame, newFrom: Long = 10000L): DataFrame = {
-    val sigs = minhashSignatures(fan(corpus)).select("doc_id", "sig")
+    val sigs = minhashSignatures(Par.fan(corpus)).select("doc_id", "sig")
       .persist() // lazy on purpose: eager measured 1.21 -> 1.89 s here
     bandProbe(sigs, bands(sigs), newFrom)
   }
@@ -284,7 +276,7 @@ object Dedup {
     * near-dup pipeline): |A∩B| / |A∪B| on distinct shingle sets.
     */
   def ngramJaccard(corpus: DataFrame): DataFrame = {
-    val sh = shingleSets(fan(corpus))
+    val sh = shingleSets(Par.fan(corpus))
       .select(col("doc_id"), col("shingles").as("sh"))
       .persist() // lazy on purpose: eager measured 2.49 -> 2.78 s here
     val cands = candidatePairs(corpus)
@@ -313,7 +305,7 @@ object Dedup {
     // Hash BEFORE the distinct: the dedup shuffle then carries 8-byte longs
     // rather than bigram strings (same result — equal bigrams hash equal;
     // 2^60 collisions negligible).
-    val hashed = fan(corpus)
+    val hashed = Par.fan(corpus)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), col("toks"), posexplode(col("toks")))
@@ -452,7 +444,7 @@ object Dedup {
     * corpus.
     */
   def duplicateSpans(corpus: DataFrame): DataFrame = {
-    val grams = fan(corpus)
+    val grams = Par.fan(corpus)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= SpanGram)
       .select(col("doc_id"), col("toks"), posexplode(col("toks")))

@@ -276,18 +276,6 @@ object Frames {
       col("updatedAt").desc)
       .limit(1)
 
-  /** Streaming exact dedup: drop duplicate event_ids with bounded state —
-    * `dropDuplicatesWithinWatermark` keeps keys only as long as the
-    * watermark can still admit a duplicate, so state size is bounded by the
-    * delay window (the unbounded `dropDuplicates` variant would grow state
-    * forever at 100 TB/day). Batch input: plain dropDuplicates semantics.
-    */
-  def streamDedup(events: DataFrame): DataFrame = {
-    val e = Synth.eventTime(events).withWatermark("ts", WatermarkDelay)
-    if (e.isStreaming) e.dropDuplicatesWithinWatermark("event_id")
-    else e.dropDuplicates("event_id")
-  }
-
   /** T3: keep only the rows of the latest window (reference:
     * region_aggregator.py:32-38 does this driver-side over collected rows).
     */

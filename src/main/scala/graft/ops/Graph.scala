@@ -45,7 +45,7 @@ object Graph {
     * use. */
   /** Memo of checkpointed edge tables keyed by (session, canonicalized
     * input plan): [[linkRank]] and [[khopReach]] are both registered
-    * queries over the same `documents` scan, and a Verify/Bench/ScaleSmoke
+    * queries over the same `documents` scan, and a Verify/Bench
     * session runs both — without the memo the identical edge table
     * materializes twice. Canonicalized plans are structurally hashable,
     * so a freshly-built-but-identical `Tables.documents` read hits. */

@@ -198,9 +198,7 @@ object IvfPqIndex {
     searchIndex(spark, ensure(spark, sfDir), Tables.embeddings(spark, sfDir))
 
   /** The search plan against an explicit index directory and corpus
-    * frame — what [[searchPrebuilt]] runs after `ensure`, and what the
-    * ScaleSmoke harness times at replica volume (build once with
-    * [[buildAndWrite]], then search repeatedly here). */
+    * frame — what [[searchPrebuilt]] runs after `ensure`. */
   def searchIndex(spark: SparkSession, dir: String,
       emb: DataFrame): DataFrame = {
     val queries = emb.filter(col("vec_id") < SearchQueries)

@@ -120,15 +120,8 @@ object LshIndex {
 
   /** Sketch `corpus` = (doc_id, text) and persist sigs/ + bands/ +
     * buckets/ under `dir`. Pure function of the input (md5-derived hash
-    * family). */
-  /** `blockBytes` sizes the footer blocks of all three tables (default:
-    * [[Gavro.DefaultBlockBytes]]). The probe's sub-file pruning only
-    * bites when blocks-per-file exceeds the probe's keys-per-file — at
-    * production corpus scale that holds at any block size, at fixture
-    * scale ScaleSmoke passes a smaller block to measure the production
-    * REGIME rather than the fixture's inverted one. */
-  def buildAndWrite(corpus: DataFrame, dir: String,
-      blockBytes: Long = Gavro.DefaultBlockBytes): Unit = {
+    * family). All three tables use [[Gavro.DefaultBlockBytes]] blocks. */
+  def buildAndWrite(corpus: DataFrame, dir: String): Unit = {
     val sigs = Dedup.minhashSignatures(corpus)
       .select(col("doc_id"), col("sig")).persist()
     val sigRows = sigs
@@ -139,7 +132,7 @@ object LshIndex {
     // broadcast-filtered scan, per-file task fan-out only helps it. (The
     // pre-v4 coalesce(1) serialized the CORPUS-scale table through one
     // task: the build-wall cap the round-13 verdict flagged.)
-    Gavro.write(sigRows, s"$dir/sigs", blockBytes = blockBytes)
+    Gavro.write(sigRows, s"$dir/sigs")
     // Uncapped: the index stores EVERY band row; the mega-bucket skew cap
     // is probe-time policy (it must count probe-side rows too, the way
     // the oracle does — the `buckets/` table below supplies the persisted
@@ -162,10 +155,8 @@ object LshIndex {
     val routed = Gavro.exactPartition(
         Dedup.bands(sigs).withColumn("slot", slotExpr),
         "slot", NumBands * SaltM).persist()
-    Gavro.write(bandBins(routed), s"$dir/bands", blockBytes = blockBytes,
-      statCols = BandStatCols)
+    Gavro.write(bandBins(routed), s"$dir/bands", statCols = BandStatCols)
     Gavro.write(occupancyBins(routed), s"$dir/buckets",
-      blockBytes = blockBytes,
       statCols = Seq("band_idx", "max_doc", "slot"))
     routed.unpersist()
     sigs.unpersist()

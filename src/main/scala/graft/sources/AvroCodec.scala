@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.ops.Par
+
 /** S3 transport without the jar: a minimal Avro BINARY codec for the
   * reference's two direct-topic reader schemas — `request_log` and
   * `system_metrics` (reference: src/streaming/schemas.py:188-189) — plus
@@ -696,15 +698,14 @@ object AvroCodec {
     * scan plans ONE task and the per-row encode+decode (the dominant
     * cost, ~2 s per 100 k rows) serializes on one core; and the final
     * global `orderBy`'s range-partitioner SAMPLING pass re-runs the
-    * whole pipeline a second time. `fan` ([[graft.ops.Par.fan]])
-    * round-robins the narrow RAW rows over `defaultParallelism` before
+    * whole pipeline a second time. [[Par.fan]] round-robins the narrow
+    * RAW rows over `defaultParallelism` before
     * the codec runs — GUARDED on the input's scan parallelism, so a wide
     * production scan passes through with no added Exchange and only the
     * single-file fixture narrows get spread — and `once` persists the decoded
     * projection so the sort samples a materialized result instead of
     * re-decoding. Bench clears the cache between runs, so every timed
     * run still pays the full decode exactly once. */
-  private def fan(df: DataFrame): DataFrame = graft.ops.Par.fan(df)
   private def once(df: DataFrame): DataFrame = df.persist()
 
   /** S3 closed end-to-end in-plan: synthesize request_log records from the
@@ -740,7 +741,7 @@ object AvroCodec {
   }
 
   def avroRoundtrip(events: DataFrame): DataFrame = {
-    once(fan(events)
+    once(Par.fan(events)
       .select(col("event_id"), requestLogRec.as("rec"))
       .select(col("event_id"), expr("to_avro_graft(rec, 'request_log')").as("bin"))
       .select(col("event_id"),
@@ -797,7 +798,7 @@ object AvroCodec {
     * exercising PERMISSIVE through the resolved path. The oracle computes
     * the evolved view directly from `events`. */
   def avroEvolution(events: DataFrame): DataFrame = {
-    once(fan(events)
+    once(Par.fan(events)
       .select(col("event_id"), requestLogRec.as("rec"))
       .select(col("event_id"), expr("to_avro_graft(rec, 'request_log')").as("bin"))
       .select(col("event_id"),
@@ -862,7 +863,7 @@ object AvroCodec {
     * handling, the ZonedTimestamp string round-trip, and the metadata
     * tail all decode exactly. */
   def cdcAvroDecode(orders: DataFrame): DataFrame = {
-    once(fan(orders)
+    once(Par.fan(orders)
       .select(col("o_orderkey"), ordersCdcRec.as("rec"))
       .select(col("o_orderkey"), expr("to_avro_graft(rec, 'orders_cdc')").as("bin"))
       .select(
@@ -926,7 +927,7 @@ object AvroCodec {
     * truncated for the PERMISSIVE channel, decoded, deleted-filtered, and
     * every surviving column recomputed by the oracle from `events`. */
   def cdcSessionsDecode(events: DataFrame): DataFrame = {
-    once(fan(events)
+    once(Par.fan(events)
       .select(col("event_id"), sessionsCdcRec.as("rec"))
       .select(col("event_id"), expr("to_avro_graft(rec, 'sessions_cdc')").as("bin"))
       .select(col("event_id"),

@@ -42,8 +42,8 @@ object Jobs {
   val MaxFilesPerTrigger = 64
 
   /** File-based stream source for local/dev runs (S11 streaming form):
-    * parquet drop-dir with the explicit schema. Kafka deployments use
-    * [[KafkaStack.cdcStream]] instead. */
+    * parquet drop-dir with the explicit schema. The reference reads Kafka
+    * here; the build's Spark jars carry no Kafka connector. */
   def fileEventStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", MaxFilesPerTrigger)
@@ -119,8 +119,8 @@ object Jobs {
     start(graft.ops.Frames.geoFrame(source()), "geo",
       checkpointBase, KvSink.geoWriter(kv), trigger))
 
-  /** Derived alerts job: consume a KPI snapshot stream (in production the
-    * `aggregated.kpis` read-back via [[KafkaStack.jsonStream]] — the
+  /** Derived alerts job: consume a KPI snapshot stream (in the reference,
+    * the `aggregated.kpis` topic read-back — the
     * reference routes alert evaluation through that derived topic precisely
     * so the threshold eval + state machine don't chain stateful operators
     * onto the windowed aggregation in one query), evaluate thresholds per

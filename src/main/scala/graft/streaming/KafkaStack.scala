@@ -1,36 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** The reference's Kafka source/sink stack (SURVEY.md §2 S1/S2/S4/S7/S9)
-  * re-expressed for Structured Streaming.
+/** The transport-independent pieces of the reference's Kafka stack
+  * (SURVEY.md §2 S4/S9): the Schema Registry lookup and the KPI sink
+  * payload.
   *
-  * `format("kafka")` is resolved at runtime, so this compiles and runs on any
-  * cluster with the kafka connector on the classpath; in this container the
-  * streaming tests exercise the same downstream plans through MemoryStream
-  * instead (no broker, no egress). Avro decode (S3) is the one omission: the
-  * `spark-avro` artifact isn't shipped here, so wire payloads are JSON-decoded
-  * (`from_json`) — the Confluent wire-header strip and the rest of the CDC
-  * pipeline are transport-independent and identical.
+  * The Kafka transport itself (`format("kafka")` source and sink) is not
+  * built: the Spark jars the build compiles against carry no Kafka
+  * connector, so no check could run it. The CDC semantics it would carry
+  * (wire-header strip, op filter, timestamp normalization) live in
+  * [[graft.sources.Cdc]], where the batch oracle verifies them.
   */
 object KafkaStack {
-
-  /** S1: Kafka stream source (reference: kafka_sources.py:55-63). */
-  def kafkaStream(spark: SparkSession, brokers: String, topic: String,
-      startingOffsets: String = "latest"): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsets)
-      .option("failOnDataLoss", "false")
-      .load()
-
-  /** S2: strip the 5-byte Confluent wire header (magic byte + schema id)
-    * from the binary payload (reference: kafka_sources.py:70-72). */
-  def stripWireHeader(payload: String = "value") =
-    expr(s"substring($payload, 6, length($payload) - 5)")
 
   /** S4: fetch the writer schema for a subject from Schema Registry — using
     * the writer schema avoids the name/namespace-mismatch NULL-outs the
@@ -49,30 +32,6 @@ object KafkaStack {
     m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
   }
 
-  /** S5/S6 transport: Kafka → header strip → JSON decode → CDC envelope ops.
-    * The decode schema is explicit (never inferred in the hot path); op
-    * filter and timestamp normalization are [[graft.sources.Cdc]]'s — the
-    * same expressions the batch oracle verifies.
-    */
-  def cdcStream(spark: SparkSession, brokers: String, topic: String,
-      schema: StructType, tsCol: String, opFiltered: Boolean = true): DataFrame = {
-    val decoded = kafkaStream(spark, brokers, topic)
-      .select(from_json(stripWireHeader().cast("string"), schema).as("data"))
-      .filter(col("data").isNotNull)
-      .select("data.*")
-    val filtered = if (opFiltered) graft.sources.Cdc.opFilter(decoded) else decoded
-    // NOTE: no withWatermark here — each consumer applies its own after
-    // unioning (reference: kafka_sources.py:88-91, FLOW.md:411-412).
-    graft.sources.Cdc.normalizeTs(filtered, tsCol)
-  }
-
-  /** S7: JSON stream read-back (reference: kafka_sources.py:160-168). */
-  def jsonStream(spark: SparkSession, brokers: String, topic: String,
-      schema: StructType): DataFrame =
-    kafkaStream(spark, brokers, topic)
-      .select(from_json(col("value").cast("string"), schema).as("data"))
-      .select("data.*")
-
   /** S9: JSON-encoded Kafka sink payload for the KPI frame
     * (reference: kpi_aggregator.py:217-243) — key = updatedAt, value =
     * to_json(struct(...)) with zeroed trend fields.
@@ -87,16 +46,4 @@ object KafkaStack {
         round(col("errorRate"), 2).as("errorRate"), lit(0.0).as("errorRateTrend"),
         col("latency"), lit(0.0).as("latencyTrend"),
         col("updatedAt"))).as("value"))
-
-  /** S9 wiring: start the Kafka sink query in update mode with trigger +
-    * checkpoint (reference: kpi_aggregator.py:234-243). */
-  def startKafkaSink(payload: DataFrame, brokers: String, topic: String,
-      checkpoint: String, triggerInterval: String = "10 seconds") =
-    payload.writeStream.format("kafka")
-      .outputMode("update")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerInterval))
-      .start()
 }

@@ -277,40 +277,6 @@ object KvSink {
     }
   }
 
-  /** A11: the legacy per-region rollup the reference's vestigial EBAP sink
-    * computes driver-side over collected rows — totals, per-region event and
-    * error counts, derived error rate (reference: src/streaming/sinks/
-    * redis_sink.py:56-124). Input rows: (region_name, is_error).
-    *
-    * Unlike the reference (which collects RAW event rows and folds in
-    * Python), the rollup aggregates IN-PLAN — groupBy(region) →
-    * count/sum(when) — so the driver only ever sees O(regions) rows per
-    * micro-batch regardless of batch size. Same pattern as
-    * [[regionsWriter]]; the totals are then a fold over ≤ |regions| rows.
-    */
-  /** The in-plan half of [[regionRollupWriter]]: one row per region with
-    * event/error counts — the ONLY rows that ever cross to the driver. */
-  def regionRollup(batch: DataFrame): Array[Row] = batch
-    .groupBy(col("region_name"))
-    .agg(count(lit(1)).as("events"),
-      sum(when(col("is_error"), 1L).otherwise(0L)).as("errors"))
-    .collect()
-
-  def regionRollupWriter(kv: KvStore): (DataFrame, Long) => Unit = (batch, _) => {
-    val perRegionRows = regionRollup(batch)
-    if (perRegionRows.nonEmpty) {
-      val total = perRegionRows.map(_.getAs[Long]("events")).sum
-      val errors = perRegionRows.map(_.getAs[Long]("errors")).sum
-      val perRegion = perRegionRows.sortBy(_.getAs[String]("region_name"))
-        .map(r => s"""{"region":"${r.getAs[String]("region_name")}","events":${r.getAs[Long]("events")},"errors":${r.getAs[Long]("errors")}}""")
-      kv.writeHash("nexus:rollup:totals", Map(
-        "events" -> total.toString,
-        "errors" -> errors.toString,
-        "errorRate" -> (math.round(errors.toDouble / total * 10000.0) / 100.0).toString))
-      kv.writeJson("nexus:rollup:regions", perRegion.mkString("[", ",", "]"))
-    }
-  }
-
   private def rowJson(row: Row): String =
     row.schema.fields.map { f =>
       val v = row.getAs[Any](f.name) match {

@@ -155,6 +155,23 @@ class DedupSpec extends SparkSpec {
     assert(e.getMessage.contains("5 labels still changing"), e.getMessage)
   }
 
+  test("label propagation returns a constant-size plan whatever the round count") {
+    // Each round's Par.stage cuts the lineage: a 19-node path runs 19
+    // rounds against a 3-node path's 3, yet both plans have one size.
+    // A lazy persist would nest every previous round's plan instead.
+    def planNodes(n: Int) =
+      Dedup.propagateLabels(path(n)).queryExecution.logical.collect { case p => p }.size
+    assert(planNodes(19) == planNodes(3))
+  }
+
+  test("minhash candidates drop a band bucket over the size cap") {
+    import spark.implicits._
+    // Identical texts share every band bucket, and each bucket then holds
+    // MaxBucketSize + 1 rows: all six are over the cap, so no pair survives.
+    val mega = (1L to Dedup.MaxBucketSize + 1L).map(i => (i, base)).toDF("doc_id", "text")
+    assert(Dedup.minhashCandidates(mega).count() == 0L)
+  }
+
   test("incremental minhash emits only pairs involving the new batch") {
     import spark.implicits._
     // "old" corpus: docs 1-5; "new" arrivals 100-101 (100 dups doc 1)

@@ -104,35 +104,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("region rollup writer folds totals and per-region errors (A11)") {
-    import spark.implicits._
-    val kv = new InMemoryKvStore
-    val batch = Seq(
-      ("Japan", true), ("Japan", false), ("Brazil", false), ("Brazil", false))
-      .toDF("region_name", "is_error")
-    KvSink.regionRollupWriter(kv)(batch, 0L)
-    val totals = kv.hashes("nexus:rollup:totals")
-    assert(totals("events") == "4" && totals("errors") == "1")
-    assert(totals("errorRate") == "25.0")
-    assert(kv.strings("nexus:rollup:regions") ==
-      """[{"region":"Brazil","events":2,"errors":0},{"region":"Japan","events":2,"errors":1}]""")
-  }
-
-  test("region rollup collects O(regions) rows, never the raw batch") {
-    import spark.implicits._
-    // 10k raw rows over 3 regions: the driver-side array must be 3 rows —
-    // the in-plan groupBy is what crosses to the driver, not the batch.
-    val big = spark.range(10000)
-      .select((col("id") % 3).cast("string").as("region_name"),
-        (col("id") % 7 === 0).as("is_error"))
-    val collected = KvSink.regionRollup(big)
-    assert(collected.length == 3, s"driver saw ${collected.length} rows")
-    assert(collected.map(_.getAs[Long]("events")).sum == 10000L)
-    val kv = new InMemoryKvStore
-    KvSink.regionRollupWriter(kv)(big, 0L)
-    assert(kv.hashes("nexus:rollup:totals")("events") == "10000")
-  }
-
   test("alert state machine: normal → pending → firing → reset") {
     // Pure transition first
     var s = AlertStateMachine.initial
@@ -192,31 +163,6 @@ class StreamingSpec extends SparkSpec {
     assert(cur("ordersTrend") == "100.0")
     assert(kv.published.contains(graft.streaming.Keys.ChannelKpi)) // write-then-publish
     assert(kv.hashes.contains(graft.streaming.Keys.kpiSnapshot(1L)))
-  }
-
-  test("streaming dedup drops duplicate event ids with bounded state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Evt]
-    val query = Frames.streamDedup(input.toDF())
-      .select("event_id")
-      .writeStream.format("memory").queryName("dedup_stream_test")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      input.addData(
-        Evt(1L, ts("2024-01-01 00:01:00"), 1L, "click", 1.0, "{}"),
-        Evt(1L, ts("2024-01-01 00:01:30"), 1L, "click", 1.0, "{}"), // dup in-batch
-        Evt(2L, ts("2024-01-01 00:02:00"), 1L, "view", 1.0, "{}"))
-      query.processAllAvailable()
-      input.addData( // dup across batches, still within watermark
-        Evt(2L, ts("2024-01-01 00:03:00"), 1L, "view", 1.0, "{}"),
-        Evt(3L, ts("2024-01-01 00:04:00"), 1L, "view", 1.0, "{}"))
-      query.processAllAvailable()
-      val ids = spark.sql("SELECT event_id FROM dedup_stream_test")
-        .collect().map(_.getLong(0)).sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally query.stop()
   }
 
   test("regions writer ranks latest window and emits hub-centric flows (T4)") {
